@@ -46,23 +46,24 @@ def main():
 
     tracker = sc.statusTracker()
 
-    def n_jobs():
-        ids = tracker.getJobIdsForGroup(None)
-        return len(ids)
+    def n_jobs(group):
+        # jobs submitted under this run's own job group
+        return len(tracker.getJobIdsForGroup(group))
 
     out = {}
     for name in names:
         best = None
         for i in range(runs):
-            sc.setJobGroup(f"{name}-{i}", name)
-            j0 = n_jobs()
+            group = f"{name}-{i}"
+            sc.setJobGroup(group, name)
+            j0 = n_jobs(group)
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             t1 = time.time()
-            j1 = n_jobs()
+            j1 = n_jobs(group)
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
-            j2 = n_jobs()
+            j2 = n_jobs(group)
             rec = {"construct_s": round(t1 - t0, 3),
                    "exec_s": round(t2 - t1, 3),
                    "total_s": round(t2 - t0, 3),

@@ -31,9 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .. import MAX_EXTENDS_DEPTH, NAMESPACE, NAMESPACE_TYPE, VISIBILITY
+from .. import NAMESPACE, NAMESPACE_TYPE, VISIBILITY
 from ..functions.ids import fabric_id, property_id
 from ..functions.names import sanitize_name
+from .classes import transitive_closure
 
 ATTR_TYPE = T.StructType([
     T.StructField("name", T.StringType()),
@@ -235,35 +236,22 @@ def convert_cdm(cdm_entities: DataFrame, cdm_rels: DataFrame,
                        F.col("parse_error").alias("reason"),
                        F.concat(F.lit("doc://"), "doc_id").alias("uri")))
 
-    # J9: ancestor chain with depth (0 = self) for attribute flattening
-    self_rows = ents.select("entity_name",
-                            F.col("entity_name").alias("src"),
-                            F.lit(0).alias("depth"))
+    # J9: ancestor chain with depth (0 = self) for attribute flattening.
+    # One parent per entity, so an acyclic chain has one path per pair and
+    # its longest path is the ancestor's depth (capped at MAX_EXTENDS_DEPTH,
+    # as cycles are); closure self-pairs give way to the depth-0 rows.
     edges = (ents.where(F.col("extends").isNotNull())
-             .select("entity_name", F.col("extends").alias("src"))
-             .join(ents.select(F.col("entity_name").alias("src")),
-                   "src", "left_semi"))
-    # one driver action per round (r6 — was an isEmpty() probe PLUS an
-    # eager checkpoint per round): the frontier count materializes the
-    # lazily-checkpointed frontier, and the chain checkpoint rides the
-    # same job through the anti-join lineage
-    chain = self_rows
-    cur = edges.withColumn("depth", F.lit(1)).localCheckpoint(eager=False)
-    n_cur = cur.count()
-    for d in range(1, MAX_EXTENDS_DEPTH + 1):
-        if n_cur == 0:
-            break
-        chain = chain.unionByName(cur).dropDuplicates(
-            ["entity_name", "src"]).localCheckpoint(eager=False)
-        cur = ((cur.alias("a")
-                .join(edges.alias("b"),
-                      F.col("a.src") == F.col("b.entity_name"))
-                .select(F.col("a.entity_name").alias("entity_name"),
-                        F.col("b.src").alias("src"))
-                .withColumn("depth", F.lit(d + 1))
-                .join(chain, ["entity_name", "src"], "left_anti"))
-               .localCheckpoint(eager=False))
-        n_cur = cur.count()
+             .select(F.col("entity_name").alias("child"),
+                     F.col("extends").alias("parent"))
+             .join(ents.select(F.col("entity_name").alias("parent")),
+                   "parent", "left_semi"))
+    closure = transitive_closure(edges, hops=True)
+    chain = (ents.select("entity_name", F.col("entity_name").alias("src"),
+                         F.lit(0).alias("depth"))
+             .unionByName(closure.where(F.col("src") != F.col("dst"))
+                          .select(F.col("src").alias("entity_name"),
+                                  F.col("dst").alias("src"),
+                                  F.col("hops").alias("depth"))))
 
     attrs = (ents.select("entity_name",
                          F.explode("attributes").alias("a"))

@@ -18,13 +18,18 @@ shuffle; class-set dedup is a hash aggregate on class_uri.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .. import (OWL_CLASS, RDFS_CLASS, RDFS_SUBCLASS_OF, RDF_TYPE)
+from .. import (MAX_EXTENDS_DEPTH, OWL_CLASS, RDFS_CLASS, RDFS_SUBCLASS_OF,
+                RDF_TYPE)
 from ..functions.ids import fabric_id
 from ..functions.names import uri_to_name
+
+MAX_ROUNDS = 16  # path-doubling steps: 2^16 reachable depth
 
 
 def _iri_subjects(triples: DataFrame, pred: str, obj: str | None) -> DataFrame:
@@ -71,41 +76,66 @@ def subclass_edges(triples: DataFrame, classes: DataFrame) -> DataFrame:
     return edges.join(F.broadcast(parents), "parent", "left_semi")
 
 
-def transitive_closure(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
-    """(src,dst) reachability closure via path-doubling joins.
+def transitive_closure(edges: DataFrame, key: Sequence[str] = (),
+                       hops: bool = False) -> DataFrame:
+    """edges(*key, child, parent) → (*key, src, dst[, hops]) reachability
+    closure via path-doubling joins — the engine's one closure loop.
 
-    Doubling gives 2^max_rounds reachable depth in max_rounds shuffles;
+    Doubling gives 2^MAX_ROUNDS reachable depth in MAX_ROUNDS shuffles;
     localCheckpoint each round truncates lineage (SURVEY §4 device 3).
-    Edge sets here are class hierarchies (≤500 types by Fabric limit per
+    Edge sets here are schema hierarchies (≤500 types by Fabric limit per
     ontology), so every round is a small-table join.
+
+    ``key`` columns must also match across each joined pair, so one loop
+    closes every key's edge set at once (e.g. per predicate). With
+    ``hops=True`` each row carries the longest path length in edges,
+    capped at MAX_EXTENDS_DEPTH so cyclic inputs converge.
     """
-    closure = edges.select(F.col("child").alias("src"), F.col("parent").alias("dst"))
-    # one driver action per round: the count() materializes the lazy
-    # checkpoint AND is the convergence check (vs old-count comparison,
-    # which re-counted the previous round's frame every round).
+    cols = [*key, F.col("child").alias("src"), F.col("parent").alias("dst")]
+    if hops:
+        cols.append(F.lit(1).alias("hops"))
+    closure = edges.select(*cols)
+
+    def state(c: DataFrame):
+        # one driver action per round: it materializes the lazy checkpoint
+        # AND is the convergence check (rows only grow and hops only rise,
+        # so an unchanged (count, sum of hops) means a fixpoint)
+        if not hops:
+            return (c.count(),)
+        return tuple(c.agg(F.count(F.lit(1)), F.sum("hops")).first())
+
     # (r6 note: seeding this first action with a double-double to save one
     # round was tried and measured SLOWER — the seed joins run over the
     # un-checkpointed edge lineage and cost more than the saved action.)
     closure = closure.localCheckpoint(eager=False)
-    prev = closure.count()
-    if prev == 0:
+    prev = state(closure)
+    if prev[0] == 0:
         return closure
 
     def double(c: DataFrame) -> DataFrame:
-        grown = (c.alias("a")
-                 .join(c.alias("b"), F.col("a.dst") == F.col("b.src"))
-                 .select(F.col("a.src").alias("src"),
-                         F.col("b.dst").alias("dst")))
-        return c.unionByName(grown).dropDuplicates()
+        on = F.col("a.dst") == F.col("b.src")
+        for k in key:
+            on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+        out = [*(F.col(f"a.{k}").alias(k) for k in key),
+               F.col("a.src").alias("src"), F.col("b.dst").alias("dst")]
+        if hops:
+            out.append(F.least(F.col("a.hops") + F.col("b.hops"),
+                               F.lit(MAX_EXTENDS_DEPTH)).alias("hops"))
+        grown = c.alias("a").join(c.alias("b"), on).select(*out)
+        both = c.unionByName(grown)
+        if not hops:
+            return both.dropDuplicates()
+        return both.groupBy(*key, "src", "dst") \
+            .agg(F.max("hops").alias("hops"))
 
     # TWO doubling steps per driver round-trip (4x reachable depth per
-    # count). The intermediate closure stays lazy inside the same job;
+    # action). The intermediate closure stays lazy inside the same job;
     # both sides of the second self-join share its identical subplan, so
     # Spark's ReusedExchange computes the intermediate dedup shuffle once.
     # A converged first step just makes the second a no-op in the same job.
-    for _ in range((max_rounds + 1) // 2):
+    for _ in range((MAX_ROUNDS + 1) // 2):
         new_closure = double(double(closure)).localCheckpoint(eager=False)
-        n = new_closure.count()
+        n = state(new_closure)
         if n == prev:
             return new_closure
         closure, prev = new_closure, n

@@ -251,8 +251,9 @@ def embedding_near_duplicates(vectors: DataFrame, threshold: float = 0.95,
             hyperplane_signature(F.col(vec_col), dim, n_planes,
                                  offset=b * n_planes).alias("bucket"))
             for b in range(max(n_bands, 1))]
-        # precompute each vector's norm ONCE per row here (O(N) norm
-        # evaluations) instead of inside the pair-scoring expression
+        # precompute each vector's norm once per (row, band) here
+        # (O(N * n_bands) norm evaluations: it is projected after the band
+        # explode) instead of inside the pair-scoring expression
         # (O(#pairs) — quadratic in bucket occupancy); the norm value is
         # the identical expression over the identical input, so the cosine
         # is bit-for-bit unchanged. The signed frame is materialized once:

@@ -14,7 +14,7 @@ dtdl_converter.py:100-118):
 - ancestor/sibling property-name conflict suffixing (W4,
   dtdl_converter.py:232-306): the reference's "first registered" global
   registry order is conversion order (topo-sorted parents-first); this
-  engine pins (inheritance_depth, dtmi, pos) — equivalent on the reference
+  engine pins (inheritance depth, dtmi, pos) — equivalent on the reference
   corpus, deterministic at scale
 - entityIdParts auto-inference by primary-key name patterns
   (reference: src/core/validators/fabric_limits.py:407-541,
@@ -34,10 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .. import MAX_EXTENDS_DEPTH, NAMESPACE, NAMESPACE_TYPE, VISIBILITY
+from .. import NAMESPACE, NAMESPACE_TYPE, VISIBILITY
 from ..functions.ids import clean_dtmi, dtmi_fabric_id, property_id
 from ..functions.names import sanitize_name
 from ..functions.typemaps import DTDL_TO_FABRIC
+from .classes import transitive_closure
 
 CONTENT_TYPE = T.StructType([
     T.StructField("content_type", T.StringType()),
@@ -105,60 +106,19 @@ def _dedup_interfaces(interfaces: DataFrame) -> DataFrame:
             .where(F.col("rn") == 1).drop("rn", "parse_error"))
 
 
-def inheritance_depth(ifaces: DataFrame,
-                      max_depth: int = MAX_EXTENDS_DEPTH) -> DataFrame:
-    """(dtmi, depth): 0 for roots; parents restricted to the interface set."""
-    edges = (ifaces
-             .select("dtmi", F.explode_outer("extends").alias("parent"))
-             .join(ifaces.select(F.col("dtmi").alias("parent")),
-                   "parent", "left_semi")
-             .select("dtmi", "parent"))
-    depth = ifaces.select("dtmi", F.lit(0).alias("depth"))
-    cur = edges.localCheckpoint(eager=False)
-    for d in range(1, max_depth + 1):
-        if cur.count() == 0:  # one action: materializes + convergence check
-            break
-        depth = (depth.join(cur.select("dtmi").dropDuplicates()
-                            .withColumn("d2", F.lit(d)), "dtmi", "left")
-                 .select("dtmi", F.greatest("depth", F.coalesce("d2", F.lit(0)))
-                         .alias("depth")))
-        cur = (cur.alias("a")
-               .join(edges.alias("b"), F.col("a.parent") == F.col("b.dtmi"))
-               .select(F.col("a.dtmi").alias("dtmi"),
-                       F.col("b.parent").alias("parent"))
-               .dropDuplicates().localCheckpoint(eager=False))
-    return depth
+def _extends_edges(ifaces: DataFrame) -> DataFrame:
+    """(child, parent) extends edges with the parent in the interface set."""
+    return (ifaces
+            .select(F.col("dtmi").alias("child"),
+                    F.explode("extends").alias("parent"))
+            .join(ifaces.select(F.col("dtmi").alias("parent")),
+                  "parent", "left_semi"))
 
 
-def ancestor_closure(ifaces: DataFrame,
-                     max_depth: int = MAX_EXTENDS_DEPTH) -> DataFrame:
+def ancestor_closure(ifaces: DataFrame) -> DataFrame:
     """(dtmi, ancestor) over extends edges within the set (J8)."""
-    edges = (ifaces
-             .select("dtmi", F.explode("extends").alias("ancestor"))
-             .join(ifaces.select(F.col("dtmi").alias("ancestor")),
-                   "ancestor", "left_semi"))
-    closure = edges.localCheckpoint(eager=False)
-    prev = closure.count()
-    if prev == 0:
-        return closure
-    # path DOUBLING (closure ⋈ closure, r6 — was closure ⋈ edges): the
-    # reachable extends-depth doubles per round, so a depth-d hierarchy
-    # converges in O(log d) driver actions instead of O(d); the closure of
-    # a DAG is identical either way, and convergence (row count stable)
-    # is exact because the row set only grows.
-    for _ in range(max_depth):
-        grown = (closure.alias("a")
-                 .join(closure.alias("b"),
-                       F.col("a.ancestor") == F.col("b.dtmi"))
-                 .select(F.col("a.dtmi").alias("dtmi"),
-                         F.col("b.ancestor").alias("ancestor")))
-        new = (closure.unionByName(grown).dropDuplicates()
-               .localCheckpoint(eager=False))
-        n = new.count()  # one action per round: materialize + converge
-        if n == prev:
-            return new
-        closure, prev = new, n
-    return closure
+    return transitive_closure(_extends_edges(ifaces)).select(
+        F.col("src").alias("dtmi"), F.col("dst").alias("ancestor"))
 
 
 def _fabric_type_expr(schema_kind, scaled_decimal_mode: str = "json_string",
@@ -241,8 +201,13 @@ def convert_interfaces(interfaces: DataFrame, modes: DtdlModes | None = None
                   "parent_dtmi", "left")
               .select("dtmi", "base_entity_type_id"))
 
-    depth = inheritance_depth(ifaces)
-    anc = ancestor_closure(ifaces)
+    # J8 ancestors and the inheritance depth (longest extends path, 0 for
+    # roots, capped at MAX_EXTENDS_DEPTH) from one closure
+    closure = transitive_closure(_extends_edges(ifaces), hops=True)
+    anc = closure.select(F.col("src").alias("dtmi"),
+                         F.col("dst").alias("ancestor"))
+    depth = closure.groupBy(F.col("src").alias("dtmi")) \
+        .agg(F.max("hops").alias("depth"))
 
     # explode property/telemetry contents
     c = (ifaces
@@ -278,7 +243,8 @@ def convert_interfaces(interfaces: DataFrame, modes: DtdlModes | None = None
 
     # W4b: sibling registry — first registered type per name in
     # (depth, dtmi, pos) order among non-ancestor-conflicted props
-    withd = conflict.join(F.broadcast(depth), "dtmi", "left")
+    withd = conflict.join(F.broadcast(depth), "dtmi", "left") \
+        .fillna(0, ["depth"])
     w = Window.partitionBy("prop_name").orderBy("depth", "dtmi", "pos")
     first_type = (withd.where(~F.col("anc_conflict"))
                   .withColumn("rn", F.row_number().over(w))

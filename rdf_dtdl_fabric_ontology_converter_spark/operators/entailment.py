@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .classes import transitive_closure
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_DOMAIN = "http://www.w3.org/2000/01/rdf-schema#domain"
 RDFS_RANGE = "http://www.w3.org/2000/01/rdf-schema#range"
@@ -53,15 +55,6 @@ RDFS_SUBPROP = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
 
 _RULES = ("rdfs2", "rdfs3", "rdfs5", "rdfs7", "rdfs9", "rdfs11")
 _SPO = ["subj", "pred", "obj"]
-
-
-def _closure(triples: DataFrame, pred: str) -> DataFrame:
-    """Transitive closure of one schema predicate's edge set → (src, dst)."""
-    from .classes import transitive_closure
-    edges = (triples.where(F.col("pred") == pred)
-             .select(F.col("subj").alias("child"),
-                     F.col("obj").alias("parent")))
-    return transitive_closure(edges)
 
 
 def rdfs_entailment(triples: DataFrame,
@@ -86,9 +79,9 @@ def rdfs_entailment(triples: DataFrame,
         is_iri: Column = F.col("obj_kind") == "iri"
     else:
         is_iri = F.col("obj").rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-    # The input feeds every rule branch (two closures, four schema frames,
-    # the instance joins, the final anti-join). A lazy pipeline upstream
-    # (e.g. Arrow extraction) would re-run once PER BRANCH — the
+    # The input feeds every rule branch (the schema closure, four schema
+    # frames, the instance joins, the final anti-join). A lazy pipeline
+    # upstream (e.g. Arrow extraction) would re-run once PER BRANCH — the
     # curate_corpus/entity_linking_disambig lesson — so materialize the
     # projected input once; every branch reuses the cached frame.
     # (Measured on the driver corpus: 54 exchanges / 33 broadcasts before,
@@ -100,28 +93,23 @@ def rdfs_entailment(triples: DataFrame,
     inst = triples
     out: list[DataFrame] = []
 
-    # Fused schema closures (r6): when both the property layer and the
-    # class layer are enabled (the default), the subPropertyOf and
-    # subClassOf transitive closures run as ONE pred-tagged path-doubling
-    # loop (_closure_by_pred) instead of two private loops — half the
-    # per-round driver actions for identical per-predicate results.
+    # One pred-keyed closure (r6 fusion) covers whichever of the
+    # subPropertyOf and subClassOf edge sets the enabled rules need: one
+    # path-doubling loop, not one per predicate.
     need_prop = bool({"rdfs5", "rdfs7"} & set(rules))
     need_cls = bool({"rdfs9", "rdfs11"} & set(rules))
-    prop_cl = cls_cl = None
-    if need_prop and need_cls:
-        both = (triples
-                .where(F.col("pred").isin([RDFS_SUBPROP, RDFS_SUBCLASS]))
-                .select("pred", F.col("subj").alias("src"),
-                        F.col("obj").alias("dst")))
-        fused = _closure_by_pred(both)
+    preds = [p for p, need in ((RDFS_SUBPROP, need_prop),
+                               (RDFS_SUBCLASS, need_cls)) if need]
+    if preds:
+        fused = transitive_closure(
+            triples.where(F.col("pred").isin(preds))
+            .select("pred", F.col("subj").alias("child"),
+                    F.col("obj").alias("parent")),
+            key=["pred"])
         prop_cl = fused.where(F.col("pred") == RDFS_SUBPROP) \
             .select("src", "dst")
         cls_cl = fused.where(F.col("pred") == RDFS_SUBCLASS) \
             .select("src", "dst")
-    elif need_prop:
-        prop_cl = _closure(triples, RDFS_SUBPROP)
-    elif need_cls:
-        cls_cl = _closure(triples, RDFS_SUBCLASS)
 
     # --- property layer -------------------------------------------------
     if need_prop:
@@ -192,39 +180,6 @@ OWL_FUNCTIONAL = "http://www.w3.org/2002/07/owl#FunctionalProperty"
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 _OWL_RULES = ("inverse", "symmetric", "transitive", "functional_sameas")
-
-
-def _closure_by_pred(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
-    """Per-predicate transitive closure of a (pred, src, dst) edge frame.
-
-    The pred-keyed twin of ``classes.transitive_closure`` (same
-    path-doubling shape, two doubling steps per driver action, lazy
-    localCheckpoint per round): one distributed job closes EVERY
-    transitive predicate at once — no per-predicate driver loop, so the
-    number of declared transitive properties never multiplies job count.
-    """
-    closure = edges.select("pred", "src", "dst").localCheckpoint(eager=False)
-    prev = closure.count()
-    if prev == 0:
-        return closure
-
-    def double(c: DataFrame) -> DataFrame:
-        grown = (c.alias("a")
-                 .join(c.alias("b"),
-                       (F.col("a.dst") == F.col("b.src")) &
-                       (F.col("a.pred") == F.col("b.pred")))
-                 .select(F.col("a.pred").alias("pred"),
-                         F.col("a.src").alias("src"),
-                         F.col("b.dst").alias("dst")))
-        return c.unionByName(grown).dropDuplicates()
-
-    for _ in range((max_rounds + 1) // 2):
-        new_closure = double(double(closure)).localCheckpoint(eager=False)
-        n = new_closure.count()
-        if n == prev:
-            return new_closure
-        closure, prev = new_closure, n
-    return closure
 
 
 def owl_entailment(triples: DataFrame,
@@ -311,9 +266,9 @@ def owl_entailment(triples: DataFrame,
         trans = declared(OWL_TRANSITIVE)
         edges = (stmts.join(trans, stmts["pred"] == trans["dp"])
                  .where(F.col("obj_is_iri"))
-                 .select("pred", F.col("subj").alias("src"),
-                         F.col("obj").alias("dst")))
-        closed = _closure_by_pred(edges)
+                 .select("pred", F.col("subj").alias("child"),
+                         F.col("obj").alias("parent")))
+        closed = transitive_closure(edges, key=["pred"])
         out.append(closed.select(F.col("src").alias("subj"), "pred",
                                  F.col("dst").alias("obj")))
     if "functional_sameas" in rules:

@@ -1,4 +1,4 @@
-"""Stage C: identity windows (W2/W3), property collection (A9), topo depth (O1).
+"""Stage C: identity windows (W2/W3) and property collection (A9).
 
 Spark mapping of the reference EntityIdentifierSetter
 (reference: src/formats/rdf/property_extractor.py:420-464):
@@ -137,43 +137,3 @@ def materialize_entity_types(classes: DataFrame,
                 .alias("timeseries_properties"),
                 "class_uri",
             ))
-
-
-def topo_depth(classes_with_parent: DataFrame,
-               max_depth: int = 10) -> DataFrame:
-    """O1: inheritance depth per class (parents before children at the sink).
-
-    Iterative join on the single chosen parent, bounded by the Fabric
-    inheritance-depth limit (reference: src/constants.py:207). Classes whose
-    chain exceeds the bound keep the max depth (reference Kahn fallback
-    appends leftovers — fabric_serializer.py:162-166).
-    """
-    edges = (classes_with_parent
-             .where(F.col("base_entity_type_id").isNotNull())
-             .select(F.col("entity_id").alias("child_id"),
-                     F.col("base_entity_type_id").alias("parent_id")))
-    depth = classes_with_parent.select(
-        F.col("entity_id"), F.lit(0).alias("depth"))
-    # one driver action per round: the count() below both materializes the
-    # lazy checkpoint and is the loop guard (the old eager checkpoint +
-    # isEmpty() pair cost two jobs per round for the same information)
-    cur = edges.localCheckpoint(eager=False)
-    n_cur = cur.count()
-    for d in range(1, max_depth + 1):
-        if n_cur == 0:
-            break
-        depth = (depth.join(cur.select(F.col("child_id").alias("entity_id"))
-                            .withColumn("d2", F.lit(d)),
-                            "entity_id", "left")
-                 .select("entity_id",
-                         F.greatest("depth", F.coalesce("d2", F.lit(0)))
-                         .alias("depth")))
-        cur = (cur.alias("a")
-               .join(edges.alias("b"),
-                     F.col("a.parent_id") == F.col("b.child_id"))
-               .select(F.col("a.child_id").alias("child_id"),
-                       F.col("b.parent_id").alias("parent_id"))
-               .dropDuplicates()
-               .localCheckpoint(eager=False))
-        n_cur = cur.count()
-    return depth

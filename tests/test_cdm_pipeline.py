@@ -154,3 +154,32 @@ def test_entity_ref_attribute_dropped(spark):
             ]}]})
     emap, _, _ = convert(spark, {"c": schema})
     assert [x["name"] for x in emap["Contact"]["properties"]] == ["contactId"]
+
+
+def _schema(name, attrs, extends=None):
+    d = {"entityName": name,
+         "hasAttributes": [{"name": n, "dataType": t} for n, t in attrs]}
+    if extends:
+        d["extendsEntity"] = extends
+    return json.dumps({"jsonSchemaSemanticVersion": "1.0.0",
+                       "definitions": [d]})
+
+
+def test_inheritance_chain_two_levels(spark):
+    # C extends B extends A: every ancestor's attributes reach C, B's
+    # override of `note` wins over A's, and the order is (-depth, pos)
+    emap, _, _ = convert(spark, {
+        "c": _schema("C", [("cFlag", "boolean")], "B"),
+        "b": _schema("B", [("bCode", "string"), ("note", "string")], "A"),
+        "a": _schema("A", [("aId", "guid"), ("aName", "string"),
+                           ("note", "boolean")]),
+    })
+    props = {e: [(x["name"], x["valueType"]) for x in emap[e]["properties"]]
+             for e in emap}
+    assert props["C"] == [("aId", "String"), ("aName", "String"),
+                          ("bCode", "String"), ("note", "String"),
+                          ("cFlag", "Boolean")]
+    assert props["B"] == [("aId", "String"), ("aName", "String"),
+                          ("bCode", "String"), ("note", "String")]
+    assert props["A"] == [("aId", "String"), ("aName", "String"),
+                          ("note", "Boolean")]
