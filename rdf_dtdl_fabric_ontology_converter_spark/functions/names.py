@@ -38,22 +38,3 @@ def uri_to_name(uri: Column, max_len: int = 128) -> Column:
     name = local_name(uri)
     name = F.when(name.isNull() | (name == ""), F.lit("Entity_0")).otherwise(name)
     return sanitize_name(name, max_len)
-
-
-def dtmi_to_name(dtmi: Column) -> Column:
-    """Strip 'dtmi:' prefix and ';version', take last ':' segment."""
-    no_ver = F.substring_index(dtmi, ";", 1)
-    return F.substring_index(no_ver, ":", -1)
-
-
-def namespace_of(uri: Column) -> Column:
-    """Everything before the local name, inclusive of the separator."""
-    return (F.when(uri.contains("#"),
-                   F.concat(F.substring_index(uri, "#", 1), F.lit("#")))
-             .when(uri.contains("/"),
-                   F.concat(F.regexp_replace(uri, "/[^/]*$", ""), F.lit("/")))
-             .otherwise(uri))
-
-
-def is_valid_fabric_name(name: Column, max_len: int = 128) -> Column:
-    return name.rlike(f"^[a-zA-Z][a-zA-Z0-9_]{{0,{max_len - 1}}}$")

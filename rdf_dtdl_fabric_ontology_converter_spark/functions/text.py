@@ -1,7 +1,7 @@
 """Text-analysis column functions for training-data pipelines.
 
 Language-ID (stopword-ratio heuristic), quality scoring (length / punct /
-stopword ratios), token counting (whitespace + BPE-ish regex), and document
+stopword ratios), token counting (whitespace split), and document
 fingerprinting (normalized md5 + rolling hash). All JVM-side built-ins.
 """
 
@@ -16,14 +16,6 @@ EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "that", "it",
 
 def ws_tokens(text) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
-
-
-def bpe_ish_tokens(text) -> Column:
-    """Subword-ish tokenization: letter runs, digit runs, single punct."""
-    return F.expr(
-        f"regexp_extract_all({text}, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]', 0)"
-    ) if isinstance(text, str) else F.regexp_extract_all(
-        text, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), F.lit(0))
 
 
 def token_count(text) -> Column:

@@ -311,13 +311,3 @@ def xsd_map_df(spark: SparkSession,
         else registry.merged("rdf", XSD_TO_FABRIC)
     rows = [(k, v, XSD_RANK.get(k, (99, v))[0]) for k, v in base.items()]
     return spark.createDataFrame(rows, "xsd_iri string, fabric_type string, rank int")
-
-
-def dtdl_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(DTDL_TO_FABRIC.items()),
-                                 "dtdl_schema string, fabric_type string")
-
-
-def cdm_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(list(CDM_TO_FABRIC.items()),
-                                 "cdm_type string, fabric_type string")

@@ -53,27 +53,6 @@ ATTR_ARRAY = ("array<struct<name:string,value_type:string,raw_type:string,"
               "is_entity_ref:boolean,is_pk:boolean,is_display:boolean,"
               "pos:int>>")
 
-CDM_ENTITIES_SCHEMA = T.StructType([
-    T.StructField("entity_name", T.StringType()),
-    T.StructField("extends", T.StringType()),
-    T.StructField("attributes", T.ArrayType(ATTR_TYPE)),
-    T.StructField("dialect", T.StringType()),
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("span_idx", T.IntegerType()),
-    T.StructField("parse_error", T.StringType()),
-])
-
-CDM_RELS_SCHEMA = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("from_entity", T.StringType()),
-    T.StructField("from_attribute", T.StringType()),
-    T.StructField("to_entity", T.StringType()),
-    T.StructField("to_attribute", T.StringType()),
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("span_idx", T.IntegerType()),
-])
-
-
 # single-pass combined schema: one row per CDM span, entities + rels nested
 _ENTITY_T = T.StructType([
     T.StructField("entity_name", T.StringType()),

@@ -32,15 +32,6 @@ from ..functions.names import uri_to_name
 MAX_ROUNDS = 16  # path-doubling steps: 2^16 reachable depth
 
 
-def _iri_subjects(triples: DataFrame, pred: str, obj: str | None) -> DataFrame:
-    cond = (F.col("pred") == pred)
-    if obj is not None:
-        cond = cond & (F.col("obj") == obj)
-    return (triples.where(cond)
-            .where(~F.col("subj").startswith("_:"))
-            .select(F.col("subj").alias("class_uri")))
-
-
 def extract_classes(triples: DataFrame) -> DataFrame:
     """→ classes(class_uri, entity_id, name).
 

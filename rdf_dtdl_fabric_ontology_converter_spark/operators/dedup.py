@@ -76,7 +76,8 @@ def shingle_rows(documents: DataFrame, text_col: str = "text",
        shuffle carried every token occurrence.
 
     Short docs (< n tokens, including empty) fall back to the whole
-    joined text as one shingle, exactly as before.
+    joined text as one shingle. NULL-text docs yield no rows, so they get
+    no MinHash signature and never cluster with empty docs.
     """
     t = F.col("t")
     shs = F.when(
@@ -85,6 +86,7 @@ def shingle_rows(documents: DataFrame, text_col: str = "text",
                     lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)))
     ).otherwise(F.array(F.concat_ws(" ", t)))
     return (documents
+            .where(F.col(text_col).isNotNull())
             .select(key_col,
                     F.explode(F.array(tokens(F.col(text_col)))).alias("t"))
             .select(key_col, F.explode(shs).alias("sh")))

@@ -33,13 +33,6 @@ TRIPLES_SCHEMA = T.StructType([
     T.StructField("parse_error", T.StringType()),   # non-null => error row
 ])
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("span_idx", T.IntegerType()),
-    T.StructField("media_ref", T.StringType()),
-])
-
-
 def sniff_format(text: str) -> str:
     """Format inference from span content.
 
@@ -177,12 +170,6 @@ def _parse_span_builtin(text: str):
         return fmt, [], f"{type(e).__name__}: {e}"
 
 
-def _qualify(term: str, kind: str, doc_id: str, span_idx: int) -> str:
-    if kind == "bnode" or term.startswith("_:"):
-        return f"_:{doc_id}/{span_idx}/{term[2:]}"
-    return term
-
-
 def extract_triples(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans) → triples DataFrame (TRIPLES_SCHEMA).
 
@@ -277,9 +264,3 @@ def split_errors(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
                                F.col("span_idx").cast("string")).alias("uri")))
     clean = triples.where(F.col("parse_error").isNull()).drop("parse_error")
     return clean, errors
-
-
-def dataset_context_count(triples: DataFrame) -> DataFrame:
-    """Quad-format graph-context count (reference: rdf_parser.py:362-371)."""
-    return triples.agg(
-        F.approx_count_distinct("graph_ctx").alias("graph_contexts"))

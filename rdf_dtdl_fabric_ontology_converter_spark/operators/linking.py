@@ -5,9 +5,9 @@ North-rule operator (J12 family). Two tiers:
 1. exact tier — broadcast the ontology dictionary (entity label + IRI local
    name, normalized) and equi-join on the normalized mention. Zero Python.
 2. fuzzy tier — for unlinked mentions: blocking join on a cheap key
-   (first char + length band) against the broadcast dictionary, then a
-   vectorized pandas UDF scores candidates with trigram Jaccard; best
-   score ≥ threshold wins (window rank 1).
+   (first char + length band) against the broadcast dictionary, then
+   native array expressions score candidates with trigram Jaccard; best
+   score ≥ threshold wins (window rank 1). Zero Python.
 
 The dictionary is ≪ executor memory by the Fabric 500-type cap per
 ontology; at corpus scale (many ontologies) the dictionary join flips from
@@ -17,10 +17,8 @@ broadcast threshold.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from ..functions.names import local_name
@@ -44,20 +42,20 @@ def entity_dictionary(entity_types: DataFrame) -> DataFrame:
             .dropDuplicates(["entity_id", "norm_label"]))
 
 
-@F.pandas_udf(DoubleType())
-def trigram_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized char-trigram Jaccard (Arrow-batched; the only Python in
-    the linking path, applied post-blocking to candidate pairs only)."""
-    def grams(s: str) -> set:
-        s = f"  {s} "
-        return {s[i:i + 3] for i in range(len(s) - 2)} if len(s) >= 3 else {s}
+def _trigrams(c: Column) -> Column:
+    # padded to >= 3 chars, so every string (NULL reads as "") has a trigram
+    s = F.concat(F.lit("  "), F.coalesce(c, F.lit("")), F.lit(" "))
+    return F.array_distinct(F.transform(
+        F.sequence(F.lit(1), F.length(s) - 2), lambda i: F.substring(s, i, 3)))
 
-    out = []
-    for x, y in zip(a, b):
-        gx, gy = grams(x or ""), grams(y or "")
-        inter = len(gx & gy)
-        out.append(inter / (len(gx) + len(gy) - inter) if inter else 0.0)
-    return pd.Series(out)
+
+def trigram_jaccard(a: Column, b: Column) -> Column:
+    """Char-trigram set Jaccard of two string columns: exact set
+    arithmetic in native array expressions, applied post-blocking to
+    candidate pairs only. Both sets are non-empty, so the union never is
+    and disjoint strings score 0.0."""
+    ga, gb = _trigrams(a), _trigrams(b)
+    return F.size(F.array_intersect(ga, gb)) / F.size(F.array_union(ga, gb))
 
 
 def extract_mentions(documents: DataFrame, max_ngram: int = 3,
@@ -138,11 +136,10 @@ def link_mentions(mentions: DataFrame, entity_types: DataFrame,
         .drop("entity_id", "label", "norm_label")
 
     # blocking: first character + coarse length band. Candidates are
-    # scored at the DISTINCT-mention level — the pandas UDF runs once per
+    # scored at the DISTINCT-mention level — the scorer runs once per
     # (mention, candidate) pair however many times the mention occurs,
     # and every occurrence then inherits the winning entity via a
-    # mention-keyed join (also makes the winner deterministic: the old
-    # per-occurrence rank-1 window kept an arbitrary occurrence).
+    # mention-keyed join, so all occurrences agree on one winner.
     block = lambda c: F.concat(F.substring(c, 1, 1),  # noqa: E731
                                F.floor(F.length(c) / 4).cast("string"))
     cand = (unlinked.select("norm_mention").dropDuplicates()
@@ -169,7 +166,7 @@ def link_mentions(mentions: DataFrame, entity_types: DataFrame,
     # (no extra Python), support is doc-keyed. The exact/unlinked/cand
     # frames each feed MULTIPLE branches below (context set + output
     # union; support join + rank join) — materialize them once or the
-    # executed plan re-runs the whole mention pipeline (and the pandas
+    # executed plan re-runs the whole mention pipeline (and the trigram
     # scorer) per branch, the curate_corpus lesson (plan audit showed 82
     # exchanges without these, 15 with).
     # (cand is NOT checkpointed: its only consumer is occ_cand, which is

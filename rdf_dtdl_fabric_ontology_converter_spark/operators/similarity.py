@@ -19,7 +19,6 @@ bucket(s) (multi-probe: low-margin bit flips / n_probe nearest cells).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -35,12 +34,12 @@ def _norm(c) -> Column:
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                qid_col: str = "query_id", qvec_col: str = "qv") -> DataFrame:
-    """Brute-force cosine top-k: → (query_id, neighbor_id, rank, cos)."""
-    scored = (vectors.crossJoin(F.broadcast(queries))
-              .where(F.col(id_col) != F.col(qid_col))
+def _cosine_topk_tail(pairs: DataFrame, k: int, id_col: str, vec_col: str,
+                      qid_col: str, qvec_col: str) -> DataFrame:
+    """Candidate (vector, query) pairs → the k best by cosine per query,
+    self pairs dropped, ties broken by vector id:
+    (query_id, neighbor_id, rank, cos)."""
+    scored = (pairs.where(F.col(id_col) != F.col(qid_col))
               .withColumn("cos", _dot(F.col(vec_col), F.col(qvec_col)) /
                           (_norm(F.col(vec_col)) * _norm(F.col(qvec_col)))))
     w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), id_col)
@@ -48,6 +47,14 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
             .where(F.col("rank") <= k)
             .select(qid_col, F.col(id_col).alias("neighbor_id"), "rank",
                     "cos"))
+
+
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                qid_col: str = "query_id", qvec_col: str = "qv") -> DataFrame:
+    """Brute-force cosine top-k: → (query_id, neighbor_id, rank, cos)."""
+    return _cosine_topk_tail(vectors.crossJoin(F.broadcast(queries)), k,
+                             id_col, vec_col, qid_col, qvec_col)
 
 
 def hyperplane_planes(dim: int, n_planes: int = 8,
@@ -113,37 +120,6 @@ def hyperplane_probe_buckets(vec_col: Column, dim: int, n_planes: int = 8,
     return F.array_distinct(F.array(*buckets))
 
 
-def cosine_topk_pandas(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       qid_col: str = "query_id",
-                       qvec_col: str = "qv") -> DataFrame:
-    """Arrow-batched numpy variant of cosine_topk.
-
-    Same results as the JVM expression version; wins when dim is large
-    (one vectorized numpy dot per batch instead of per-row aggregate
-    expressions). The Python boundary cost is amortized over the batch.
-    """
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def batch_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-        va = np.stack(a.values)
-        vb = np.stack(b.values)
-        num = (va * vb).sum(axis=1)
-        den = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-        return pd.Series(num / den)
-
-    scored = (vectors.crossJoin(F.broadcast(queries))
-              .where(F.col(id_col) != F.col(qid_col))
-              .withColumn("cos", batch_cos(F.col(vec_col), F.col(qvec_col))))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), id_col)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, F.col(id_col).alias("neighbor_id"), "rank",
-                    "cos"))
-
-
 def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
                       k: int = 5, n_planes: int = 8, id_col: str = "vec_id",
                       vec_col: str = "embedding", qid_col: str = "query_id",
@@ -164,15 +140,8 @@ def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, dim: int,
     else:
         q = queries.withColumn(
             "bucket", hyperplane_signature(F.col(qvec_col), dim, n_planes))
-    scored = (v.join(F.broadcast(q), "bucket")
-              .where(F.col(id_col) != F.col(qid_col))
-              .withColumn("cos", _dot(F.col(vec_col), F.col(qvec_col)) /
-                          (_norm(F.col(vec_col)) * _norm(F.col(qvec_col)))))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), id_col)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, F.col(id_col).alias("neighbor_id"), "rank",
-                    "cos"))
+    return _cosine_topk_tail(v.join(F.broadcast(q), "bucket"), k, id_col,
+                             vec_col, qid_col, qvec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -248,12 +217,5 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame,
     q = queries.withColumn(
         "cid", F.explode(ivf_probe_list(F.col(qvec_col), centroids,
                                         n_probe)))
-    scored = (v.join(F.broadcast(q), "cid")
-              .where(F.col(id_col) != F.col(qid_col))
-              .withColumn("cos", _dot(F.col(vec_col), F.col(qvec_col)) /
-                          (_norm(F.col(vec_col)) * _norm(F.col(qvec_col)))))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), id_col)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, F.col(id_col).alias("neighbor_id"), "rank",
-                    "cos"))
+    return _cosine_topk_tail(v.join(F.broadcast(q), "cid"), k, id_col,
+                             vec_col, qid_col, qvec_col)

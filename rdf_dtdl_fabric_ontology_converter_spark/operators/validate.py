@@ -3,12 +3,8 @@
 Spark mapping of the reference PreflightValidator
 (reference: src/formats/rdf/preflight_validator.py:262-656): every rule is
 a filter+project over the triples DataFrame, unioned into
-issues(category, severity, message, uri). Severity rollup is a groupBy;
-"seamless" iff zero errors+warnings (preflight_validator.py:652-656).
-
-Also the Fabric limits validator (reference:
-src/core/validators/fabric_limits.py:130-404): aggregate checks against the
-hard caps with the reference's 90% warning tier.
+issues(category, severity, message, uri); "seamless" iff zero
+errors+warnings (preflight_validator.py:652-656).
 """
 
 from __future__ import annotations
@@ -16,10 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import (MAX_ENTITY_TYPES, MAX_PROPERTIES_PER_ENTITY,
-                MAX_RELATIONSHIP_TYPES, OWL_DATATYPE_PROPERTY, OWL_NS,
-                OWL_OBJECT_PROPERTY, OWL_RESTRICTION, RDFS_DOMAIN, RDFS_RANGE,
-                RDF_NS, RDF_PROPERTY, RDF_TYPE, XSD_NS)
+from .. import (OWL_DATATYPE_PROPERTY, OWL_NS, OWL_OBJECT_PROPERTY,
+                OWL_RESTRICTION, RDFS_DOMAIN, RDFS_RANGE, RDF_NS,
+                RDF_PROPERTY, RDF_TYPE, XSD_NS)
 from ..functions.names import local_name
 
 SUPPORTED_XSD = [XSD_NS + t for t in (
@@ -164,49 +159,10 @@ def preflight_issues(triples: DataFrame) -> DataFrame:
     return out
 
 
-def severity_rollup(issues: DataFrame) -> DataFrame:
-    return issues.groupBy("severity").agg(F.count("*").alias("n"))
-
-
 def can_import_seamlessly(issues: DataFrame) -> bool:
     """Seamless iff zero errors and zero warnings."""
     bad = issues.where(F.col("severity").isin("error", "warning")).limit(1)
     return bad.isEmpty()
-
-
-def fabric_limit_issues(entity_types: DataFrame,
-                        relationship_types: DataFrame) -> DataFrame:
-    """Hard-cap checks with the 90% warning tier
-    (reference: fabric_limits.py:146-292)."""
-    spark = entity_types.sparkSession
-
-    def count_issue(n, cap, label):
-        if n > cap:
-            return [(f"limit:{label}", "error",
-                     f"{label} count {n} exceeds limit {cap}", None)]
-        if n > cap * 0.9:
-            return [(f"limit:{label}", "warning",
-                     f"{label} count {n} above 90% of limit {cap}", None)]
-        return []
-
-    rows = []
-    rows += count_issue(entity_types.count(), MAX_ENTITY_TYPES,
-                        "entity_types")
-    rows += count_issue(relationship_types.count(), MAX_RELATIONSHIP_TYPES,
-                        "relationship_types")
-    schema = "category string, severity string, message string, uri string"
-    over_props = (entity_types
-                  .where(F.size("properties") +
-                         F.size("timeseries_properties")
-                         > MAX_PROPERTIES_PER_ENTITY)
-                  .select(F.lit("limit:properties_per_entity")
-                          .alias("category"),
-                          F.lit("error").alias("severity"),
-                          F.concat(F.lit("entity '"), F.col("name"),
-                                   F.lit("' exceeds property limit"))
-                          .alias("message"),
-                          F.col("id").alias("uri")))
-    return spark.createDataFrame(rows, schema).unionByName(over_props)
 
 
 # ---------------------------------------------------------------------------

@@ -173,16 +173,6 @@ def stream_line_dedup(docs: DataFrame, delim: str = "\n",
                               delim, watermark, window, key_col, ts_col)
 
 
-def stream_line_ledger(docs: DataFrame, delim: str = "\n",
-                       watermark: str = "1 hour",
-                       window: str = "10 minutes",
-                       text_col: str = "text", key_col: str = "doc_id",
-                       ts_col: str = "ingest_ts") -> DataFrame:
-    """Ingest ledger twin of :func:`stream_line_dedup`."""
-    return stream_unit_ledger(docs, F.split(F.col(text_col), delim),
-                              watermark, window, key_col, ts_col)
-
-
 def run_chunk_dedup_stream(spark: SparkSession, in_path: str,
                            out_path: str, checkpoint: str, chunk: int = 10,
                            watermark: str = "1 hour",

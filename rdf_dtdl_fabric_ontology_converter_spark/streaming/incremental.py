@@ -50,34 +50,16 @@ def stream_extract_to_parquet(spark: SparkSession, in_path: str,
     return writer.start()
 
 
-def streaming_doc_counts(spark: SparkSession, in_path: str, checkpoint: str,
-                         out_path: str):
-    """Per-document triple counts as a windowless streaming aggregate with
-    watermarkless complete-mode alternative avoided: counts are appended
-    per micro-batch via foreachBatch (deterministic, resumable)."""
-    docs = read_documents_stream(spark, in_path)
-    triples = extract_triples(docs)
-
-    def write_batch(df: DataFrame, batch_id: int):
-        (df.groupBy("doc_id").count()
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_path))
-
-    return (triples.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start())
-
-
 def stream_validate_to_parquet(spark: SparkSession, in_path: str,
                                out_path: str, checkpoint: str,
                                shapes: list[dict],
                                available_now: bool = True,
                                fmt: str = "parquet"):
     """Streaming SHACL: validate each arriving document micro-batch and
-    append its violation report (exactly-once via the stream checkpoint's
-    batch id; returns the StreamingQuery).
+    write its violation report to ``{out_path}/batch_id={batch_id}``,
+    overwriting, so a batch the checkpoint replays after a crash replaces
+    its own output (exactly-once; reading ``out_path`` yields the
+    ``batch_id`` column). Returns the StreamingQuery.
 
     Per-BATCH closure semantics: sh:targetClass selection and property
     lookups see the micro-batch's own triples only — the right reading
@@ -97,8 +79,8 @@ def stream_validate_to_parquet(spark: SparkSession, in_path: str,
     def write_batch(df: DataFrame, batch_id: int):
         clean = df.where(F.col("parse_error").isNull())
         report = validate_shapes(clean, shapes)
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_path))
+        report.write.mode("overwrite").parquet(
+            f"{out_path}/batch_id={batch_id}")
 
     writer = (triples.writeStream
               .foreachBatch(write_batch)

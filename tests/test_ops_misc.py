@@ -127,6 +127,24 @@ def test_dedup_operators(spark):
         bin(int(sh[1]) ^ int(sh[4])).count("1")
 
 
+def test_null_text_has_no_shingles(spark):
+    """A NULL-text doc yields zero shingle rows, so it has no MinHash
+    signature and never pairs with an empty-text doc in LSH banding."""
+    from rdf_dtdl_fabric_ontology_converter_spark.operators.dedup import (
+        lsh_candidates, minhash_signatures, shingle_rows)
+    d = spark.createDataFrame(
+        [(1, None), (2, ""), (3, ""), (4, "alpha beta gamma delta")],
+        "doc_id bigint, text string")
+    sh = shingle_rows(d).collect()
+    assert not [r for r in sh if r["doc_id"] == 1]
+    assert {r["doc_id"] for r in sh} == {2, 3, 4}
+    assert {r["doc_id"] for r in minhash_signatures(d).collect()} == \
+        {2, 3, 4}
+    cands = {(r["doc_a"], r["doc_b"]) for r in lsh_candidates(d).collect()}
+    assert (2, 3) in cands
+    assert not any(1 in p for p in cands)
+
+
 def test_similarity_operators(spark):
     from rdf_dtdl_fabric_ontology_converter_spark.operators.similarity import (
         cosine_topk, lsh_bucketed_topk)

@@ -1,4 +1,4 @@
-"""Watermarked streaming windows, embedding near-dup, pandas-UDF cosine."""
+"""Watermarked streaming windows, embedding near-dup, streaming sinks."""
 
 import datetime
 
@@ -72,22 +72,6 @@ def test_embedding_near_duplicates(spark):
         return_capped=True)
     assert none_p.count() == 0
     assert capped.where(F.col("bucket_n") > 1).count() > 0
-
-
-def test_pandas_cosine_matches_jvm(spark):
-    from rdf_dtdl_fabric_ontology_converter_spark.operators.similarity import (
-        cosine_topk, cosine_topk_pandas)
-    import math
-    vecs = [(i, [math.sin(i * d + 1.0) for d in range(16)])
-            for i in range(40)]
-    v = spark.createDataFrame(vecs, "vec_id bigint, embedding array<float>")
-    q = v.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    jvm = [(r["query_id"], r["neighbor_id"], r["rank"])
-           for r in cosine_topk(v, q, k=5).collect()]
-    pdu = [(r["query_id"], r["neighbor_id"], r["rank"])
-           for r in cosine_topk_pandas(v, q, k=5).collect()]
-    assert sorted(jvm) == sorted(pdu)
 
 
 def test_stateful_session_stream(spark, tmp_path):
@@ -408,3 +392,35 @@ def test_stream_validate_shapes(spark, tmp_path):
     q2 = stream_validate_to_parquet(spark, in_path, out, ck, shapes)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == n1  # nothing reprocessed
+
+
+def test_stream_validate_replayed_batch_overwrites(spark, tmp_path):
+    """A crash after the sink write but before the checkpoint commit makes
+    the next run replay that batch; its report must replace, not repeat,
+    the batch's first output."""
+    import os
+    from rdf_dtdl_fabric_ontology_converter_spark.sources.documents import (
+        synth_documents)
+    from rdf_dtdl_fabric_ontology_converter_spark.streaming.incremental import (
+        stream_validate_to_parquet)
+    in_path, out = str(tmp_path / "in"), str(tmp_path / "report")
+    ck = str(tmp_path / "ck")
+    synth_documents(spark, 4, classes_per_doc=1).write.parquet(in_path)
+    shapes = [{"shape_id": "ClsShape",
+               "target_class": "http://www.w3.org/2002/07/owl#Class",
+               "properties": [{
+                   "path": "http://www.w3.org/2000/01/rdf-schema#comment",
+                   "min_count": 1}]}]
+    stream_validate_to_parquet(spark, in_path, out, ck,
+                               shapes).awaitTermination(120)
+    first = spark.read.parquet(out)
+    n1 = first.count()
+    assert n1 == 4 and {r["batch_id"] for r in first.collect()} == {0}
+    commits = os.path.join(ck, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):  # the entry and its checksum
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    stream_validate_to_parquet(spark, in_path, out, ck,
+                               shapes).awaitTermination(120)
+    assert spark.read.parquet(out).count() == n1
