@@ -21,10 +21,10 @@ North-rule operators:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import OWL_EQUIVALENT_CLASS, OWL_SAME_AS
+from .. import OWL_SAME_AS
 
 TRIPLE_KEY = ["subj", "pred", "obj", "obj_kind", "obj_datatype", "lang",
               "graph_ctx"]

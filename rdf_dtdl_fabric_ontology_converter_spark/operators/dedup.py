@@ -351,8 +351,13 @@ def dedup_pipeline(documents: DataFrame, text_col: str = "text",
     - stats: 1-row frame (n_docs, n_keepers, n_capped_buckets,
       n_capped_rows).
     """
-    hashed = documents.select(F.col(key_col).alias("doc"),
-                              F.md5(F.col(text_col)).alias("text_hash"))
+    # a NULL md5 would never match in the doc2keeper join: key each
+    # NULL-text doc by its own id, so it is a singleton cluster and keeper
+    hashed = documents.select(
+        F.col(key_col).alias("doc"),
+        F.coalesce(F.md5(F.col(text_col)),
+                   F.concat(F.lit("null:"), F.col(key_col).cast("string")))
+        .alias("text_hash"))
     groups = hashed.groupBy("text_hash").agg(F.min("doc").alias("keeper"))
     # doc2keeper has a single consumer (the assignments join below), so it
     # carries no checkpoint: the md5 aggregate it shares with keep_docs is

@@ -13,11 +13,15 @@ Spark mapping of the reference ObjectPropertyExtractor
 - per (domain × range) pair expansion with dedup key prop::d->r (J5,
   property_extractor.py:389-407)
 - skips with the reference's exact reason strings
-  (property_extractor.py:374-387)
+  (property_extractor.py:374-387), picked in ONE flagged pass: the property
+  set left-joined to the broadcast domain/range key sets, then a ``when``
+  chain — one projection, not a union of anti-joins (J6)
 
 Scale: usage inference joins the full triple corpus against the (small)
 object-property set — broadcast the property set, shuffle only the matching
-usage triples on subj/obj for the type lookups.
+usage triples on subj/obj for the type lookups. The property set and the
+resolved domain/range frames are schema-bounded and feed both outputs, so
+each is checkpointed once; neither output re-runs the usage scan.
 """
 
 from __future__ import annotations
@@ -126,8 +130,10 @@ def extract_relationships(triples: DataFrame, classes: DataFrame,
     supplies the 'dom'/'rng' slices so no private loops run here.
     ``franges``: optional shared ``first_ranges`` frame (build_graph).
     """
+    # props, all_dom and all_rng are schema-bounded and feed both outputs:
+    # checkpoint them so neither write re-runs usage_inference's scan
     props = object_property_set(triples, xsd_map, prop_domains,
-                                franges=franges)
+                                franges=franges).localCheckpoint(eager=False)
 
     dom_t = rng_t = None
     if resolved is not None:
@@ -154,28 +160,25 @@ def extract_relationships(triples: DataFrame, classes: DataFrame,
     fallback_rng = (inf_rng.join(F.broadcast(has_rng), "prop_uri", "left_anti")
                     .select("prop_uri",
                             F.col("inferred_range").alias("range_uri")))
-    all_dom = domains.unionByName(fallback_dom)
-    all_rng = ranges.unionByName(fallback_rng)
+    all_dom = domains.unionByName(fallback_dom).localCheckpoint(eager=False)
+    all_rng = ranges.unionByName(fallback_rng).localCheckpoint(eager=False)
 
-    # skip accounting (J6 anti-joins) with reference-exact reason strings
-    d_set = all_dom.select("prop_uri").dropDuplicates()
-    r_set = all_rng.select("prop_uri").dropDuplicates()
-    no_d = props.join(F.broadcast(d_set), "prop_uri", "left_anti")
-    no_r = props.join(F.broadcast(r_set), "prop_uri", "left_anti")
-    no_both = no_d.join(F.broadcast(no_r), "prop_uri", "left_semi")
-    only_no_d = no_d.join(F.broadcast(no_both), "prop_uri", "left_anti")
-    only_no_r = no_r.join(F.broadcast(no_both), "prop_uri", "left_anti")
-
-    def _skip(df: DataFrame, reason: str) -> DataFrame:
-        return df.select(
-            F.lit("relationship").alias("item_type"),
-            uri_to_name(F.col("prop_uri")).alias("name"),
-            F.lit(reason).alias("reason"),
-            F.col("prop_uri").alias("uri"))
-
-    skipped = (_skip(no_both, "missing both domain and range")
-               .unionByName(_skip(only_no_d, "missing domain class"))
-               .unionByName(_skip(only_no_r, "missing range class")))
+    # skip accounting (J6): one flagged pass over the property set with
+    # the reference-exact reason strings, in the reference's order
+    has_d = all_dom.select("prop_uri", F.lit(True).alias("has_d")).distinct()
+    has_r = all_rng.select("prop_uri", F.lit(True).alias("has_r")).distinct()
+    flagged = (props.join(F.broadcast(has_d), "prop_uri", "left")
+               .join(F.broadcast(has_r), "prop_uri", "left"))
+    reason = (F.when(F.col("has_d").isNull() & F.col("has_r").isNull(),
+                     "missing both domain and range")
+              .when(F.col("has_d").isNull(), "missing domain class")
+              .when(F.col("has_r").isNull(), "missing range class"))
+    skipped = (flagged.select(
+                   F.lit("relationship").alias("item_type"),
+                   uri_to_name(F.col("prop_uri")).alias("name"),
+                   reason.alias("reason"),
+                   F.col("prop_uri").alias("uri"))
+               .where(F.col("reason").isNotNull()))
 
     # J5: pair expansion + dedup, ids joined from the class table
     # (both sides schema-bounded → broadcast the range side)

@@ -84,12 +84,12 @@ class IncrementalKG:
         q.awaitTermination(timeout_sec)
 
         res = self._build()
-        et = self.snapshots.stage(self.VERTEX_STAGE,
-                                  lambda: res.entity_types, force=True)
-        rt = self.snapshots.stage(self.EDGE_STAGE,
-                                  lambda: res.relationship_types, force=True)
-        sk = self.snapshots.stage(self.SKIP_STAGE,
-                                  lambda: res.skipped_items, force=True)
+        self.snapshots.stage(self.VERTEX_STAGE,
+                             lambda: res.entity_types, force=True)
+        self.snapshots.stage(self.EDGE_STAGE,
+                             lambda: res.relationship_types, force=True)
+        self.snapshots.stage(self.SKIP_STAGE,
+                             lambda: res.skipped_items, force=True)
         # file-manifest snapshot of the append-only triple log (Iceberg
         # manifest concept): streaming part files are immutable once
         # closed, so pinning the list = pinning the log's exact state.
@@ -99,14 +99,16 @@ class IncrementalKG:
         from pathlib import Path
         files = [str(p) for p in Path(self.triples_path).glob("part-*")]
         self.snapshots.files_stage(self.TRIPLES_STAGE, files)
+        # each stage's manifest already records the row count it wrote
+        et, rt, sk = (self.snapshots.snapshot_info(s) for s in
+                      (self.VERTEX_STAGE, self.EDGE_STAGE, self.SKIP_STAGE))
         return {
-            "entity_types": self.snapshots.snapshot_info(self.VERTEX_STAGE),
-            "relationship_types":
-                self.snapshots.snapshot_info(self.EDGE_STAGE),
-            "skipped_items": self.snapshots.snapshot_info(self.SKIP_STAGE),
-            "n_entity_types": et.count(),
-            "n_relationship_types": rt.count(),
-            "n_skipped": sk.count(),
+            "entity_types": et,
+            "relationship_types": rt,
+            "skipped_items": sk,
+            "n_entity_types": et["rows"],
+            "n_relationship_types": rt["rows"],
+            "n_skipped": sk["rows"],
         }
 
     def _build(self) -> PipelineResult:

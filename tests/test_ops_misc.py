@@ -462,6 +462,23 @@ def test_dedup_pipeline_identical_megacluster(spark):
     assert asg[3000] == (3000, True)
 
 
+def test_dedup_pipeline_keeps_null_text_docs(spark):
+    """One assignment row per input doc: each NULL-text doc is its own
+    singleton cluster and keeper (a NULL md5 never matches a join)."""
+    from rdf_dtdl_fabric_ontology_converter_spark.operators.dedup import (
+        dedup_pipeline)
+    text = "alpha beta gamma delta epsilon zeta"
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, text), (4, text)],
+        "doc_id bigint, text string")
+    assignments, stats = dedup_pipeline(docs)
+    asg = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+           for r in assignments.collect()}
+    assert asg == {1: (1, True), 2: (2, True), 3: (3, True), 4: (3, False)}
+    st = stats.collect()[0]
+    assert st["n_docs"] == 4 and st["n_keepers"] == 3
+
+
 def test_dedup_pipeline_bucket_cap(spark):
     """Near-identical-but-unequal family larger than max_bucket: excluded
     from the pair join and surfaced in the stats frame — never silent."""

@@ -6,6 +6,8 @@ inheritance, :157-181 multi-domain, :269-309 XSD matrix) — the P/R≥0.95
 oracle per BASELINE.json.
 """
 
+import re
+
 import pytest
 
 import corpus
@@ -101,6 +103,39 @@ def test_rel_missing_range_skipped_with_reason(spark):
     skips = {(r["item_type"], r["name"], r["reason"])
              for r in res.skipped_items.collect()}
     assert ("relationship", "knows", "missing range class") in skips
+
+
+def _plan_joins(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines()
+               if re.sub(r"^[\s:+|-]*", "", line).startswith("Join "))
+
+
+def test_rel_skip_reasons_one_flagged_pass(spark):
+    """J6: each skip reason once, from one flagged pass over the property
+    set (plan budget), not a union of nested anti-joins (881 joins)."""
+    ttl = """
+@prefix owl: <http://www.w3.org/2002/07/owl#> .
+@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+@prefix ex: <http://example.org/> .
+ex:A a owl:Class .
+ex:B a owl:Class .
+ex:full a owl:ObjectProperty ; rdfs:domain ex:A ; rdfs:range ex:B .
+ex:noRange a owl:ObjectProperty ; rdfs:domain ex:A .
+ex:noDomain a owl:ObjectProperty ; rdfs:range ex:B .
+ex:bare a owl:ObjectProperty .
+"""
+    res = run_pipeline(spark, docs_from_payloads(spark, {"x": ttl}))
+    assert _plan_joins(res.skipped_items) <= 20
+    assert sorted(tuple(r) for r in res.skipped_items.collect()) == [
+        ("relationship", "bare", "missing both domain and range",
+         "http://example.org/bare"),
+        ("relationship", "noDomain", "missing domain class",
+         "http://example.org/noDomain"),
+        ("relationship", "noRange", "missing range class",
+         "http://example.org/noRange"),
+    ]
+    assert [r["name"] for r in res.relationship_types.collect()] == ["full"]
 
 
 @pytest.mark.parametrize("xsd,expected", [
