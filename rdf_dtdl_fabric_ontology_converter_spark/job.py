@@ -24,7 +24,8 @@ REST-client section is out of engine scope (SURVEY S9). Explicit CLI flags
 take precedence over the file, matching the reference CLI.
 
 Writes entity_types/, relationship_types/, skipped_items/, issues/ under
-the output root and prints a one-line JSON metrics summary.
+the output root and prints a one-line JSON metrics summary. issues/ holds
+the RDF preflight, DTDL, CDM and definition-schema validators' rows.
 """
 
 from __future__ import annotations
@@ -119,7 +120,8 @@ def main(argv=None) -> int:
 
     from .operators.dtdl import DtdlModes
     from .operators.metrics import ontology_name, skipped_rollup, success_rate
-    from .operators.validate import definition_schema_issues, preflight_issues
+    from .operators.validate import (cdm_issues, definition_schema_issues,
+                                     dtdl_issues, preflight_issues)
     from .plans.unified import run_unified
     from .session import build_session
     from .sources.documents import read_documents
@@ -143,6 +145,14 @@ def main(argv=None) -> int:
                       cdm_flatten_inheritance=args.cdm_flatten_inheritance,
                       entailment=layers)
     triples = uni.rdf.triples
+
+    def source_issues():
+        """Issues of the input, one validator per front-end."""
+        return (preflight_issues(triples)
+                .unionByName(dtdl_issues(uni.interfaces))
+                .unionByName(cdm_issues(uni.cdm_entities,
+                                        uni.cdm_relationships)))
+
     if args.checkpoint_root:
         from .plans.checkpoint import CheckpointManager
         cp = CheckpointManager(spark, args.checkpoint_root)
@@ -150,11 +160,11 @@ def main(argv=None) -> int:
         rels = cp.stage("unified_relationships",
                         lambda: uni.relationship_types)
         skipped = cp.stage("unified_skipped", lambda: uni.skipped_items)
-        issues = cp.stage("issues", lambda: preflight_issues(triples))
+        issues = cp.stage("issues", source_issues)
     else:
         ents, rels, skipped = (uni.entity_types, uni.relationship_types,
                                uni.skipped_items)
-        issues = preflight_issues(triples)
+        issues = source_issues()
 
     write_table(ents, f"{args.output}/entity_types")
     write_table(rels, f"{args.output}/relationship_types")

@@ -1,18 +1,33 @@
-"""Pre-flight validation: 11 rule families → one issues DataFrame.
+"""Validators: rule rows evaluated into one issues DataFrame per input.
 
-Spark mapping of the reference PreflightValidator
-(reference: src/formats/rdf/preflight_validator.py:262-656): every rule is
-a filter+project over the triples DataFrame, unioned into
-issues(category, severity, message, uri); "seamless" iff zero
-errors+warnings (preflight_validator.py:652-656).
+Spark mapping of the reference validators (RDF PreflightValidator,
+src/formats/rdf/preflight_validator.py:262-656; DTDL, Fabric definition
+schema and CDM validators, cited per function). Each validator returns
+issues(category, severity, message, uri), from two kinds of rule:
+
+- a row-local rule tests one row on its own. It is a row of data,
+  ``(category, severity, condition, message, uri)``, and ``_evaluate``
+  runs every row-local rule of an input in one projection;
+- a cross-row rule reads other rows (duplicates, cycles, unknown
+  endpoints, missing signatures, type caps). The input gets one shared
+  aggregate or join, and the rules then read its columns as row-local
+  rules do.
+
+So a validator is a union of a few projections, not one branch per rule.
+"seamless" iff zero errors+warnings (preflight_validator.py:652-656).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from operator import or_
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import (OWL_DATATYPE_PROPERTY, OWL_NS, OWL_OBJECT_PROPERTY,
+from .. import (MAX_DEFINITION_BYTES, MAX_ENTITY_ID_PARTS, MAX_ENTITY_TYPES,
+                MAX_PROPERTIES_PER_ENTITY, MAX_RELATIONSHIP_TYPES,
+                OWL_DATATYPE_PROPERTY, OWL_NS, OWL_OBJECT_PROPERTY,
                 OWL_RESTRICTION, RDFS_DOMAIN, RDFS_RANGE, RDF_NS,
                 RDF_PROPERTY, RDF_TYPE, XSD_NS)
 from ..functions.names import local_name
@@ -26,137 +41,127 @@ _CHARACTERISTICS = ["FunctionalProperty", "InverseFunctionalProperty",
                     "TransitiveProperty", "ReflexiveProperty",
                     "IrreflexiveProperty"]
 
-
-def _issue(df: DataFrame, category: str, severity: str, message,
-           uri=None) -> DataFrame:
-    return df.select(
-        F.lit(category).alias("category"),
-        F.lit(severity).alias("severity"),
-        (message if not isinstance(message, str) else F.lit(message))
-        .alias("message"),
-        (uri if uri is not None else F.lit(None).cast("string")).alias("uri"))
+_ISSUES_T = ("array<struct<category:string,severity:string,message:string,"
+             "uri:string>>")
 
 
-def _subjects_of_type(triples: DataFrame, type_uri: str) -> DataFrame:
-    return (triples.where((F.col("pred") == RDF_TYPE) &
-                          (F.col("obj") == type_uri))
-            .select("subj").dropDuplicates())
+def _issue(category: str, severity: str, message, uri=None) -> Column:
+    """One issue struct; ``message`` and ``uri`` are strings or Columns."""
+    def col(v):
+        return v if isinstance(v, Column) else F.lit(v)
+    return F.struct(F.lit(category).alias("category"),
+                    F.lit(severity).alias("severity"),
+                    col(message).cast("string").alias("message"),
+                    col(uri).cast("string").alias("uri"))
+
+
+def _each(items: Column, category: str, severity: str, message,
+          uri=None) -> Column:
+    """array<issue>: one issue per element x of ``items`` (NULL: none),
+    with message ``message(x)``."""
+    return F.coalesce(
+        F.transform(items, lambda x: _issue(category, severity, message(x),
+                                            uri)),
+        F.array().cast(_ISSUES_T))
+
+
+def _evaluate(df: DataFrame, rules, *each: Column) -> DataFrame:
+    """Every rule row (category, severity, condition, message, uri) over
+    ``df`` in one projection: one issue per (input row, rule whose
+    condition holds), plus one per element of each ``each`` array."""
+    fired = F.filter(F.array(*[F.when(cond, _issue(cat, sev, msg, uri))
+                               for cat, sev, cond, msg, uri in rules]),
+                     lambda x: x.isNotNull())
+    return df.select(F.inline(F.concat(fired, *each)))
+
+
+_COMPLEX = ("intersectionOf", "complementOf", "oneOf")
+_PROPERTY_TYPES = [OWL_DATATYPE_PROPERTY, OWL_OBJECT_PROPERTY, RDF_PROPERTY]
+_TYPES_READ = ([OWL_RESTRICTION, OWL_NS + "NamedIndividual",
+                OWL_NS + "AnnotationProperty", RDF_NS + "Statement"]
+               + _PROPERTY_TYPES + [OWL_NS + c for c in _CHARACTERISTICS])
 
 
 def preflight_issues(triples: DataFrame) -> DataFrame:
     """→ issues(category, severity, message, uri)."""
-    t = triples
-    name = local_name(F.col("subj"))
+    subj, pred, obj = F.col("subj"), F.col("pred"), F.col("obj")
+    name = local_name(subj)
+    iri = ~subj.startswith("_:")
 
-    imports = _issue(
-        t.where(F.col("pred") == OWL_NS + "imports"),
-        "external_import", "warning",
-        F.concat(F.lit("External import detected: "), F.col("obj")),
-        F.col("obj"))
-
-    complex_exprs = [
-        _issue(t.where(F.col("pred") == OWL_NS + kind)
-               .select("subj").dropDuplicates(),
-               "complex_class_expression", "warning",
-               F.lit(f"owl:{kind} class expression"), F.col("subj"))
-        for kind in ("intersectionOf", "complementOf", "oneOf")
-    ]  # unionOf is supported → not flagged (preflight_validator.py:347)
-
-    restrictions = _issue(
-        _subjects_of_type(t, OWL_RESTRICTION),
-        "property_restriction", "warning",
-        F.lit("OWL restriction"), F.col("subj"))
-
-    characteristics = [
-        _issue(_subjects_of_type(t, OWL_NS + c)
-               .where(~F.col("subj").startswith("_:")),
-               "property_characteristic", "info",
-               F.concat(F.lit(f"Property characteristic '{c}' on '"),
-                        name, F.lit("'")), F.col("subj"))
-        for c in _CHARACTERISTICS
+    per_triple = [
+        ("external_import", "warning", pred == OWL_NS + "imports",
+         F.concat(F.lit("External import detected: "), obj), obj),
+        ("property_chain", "warning", pred == OWL_NS + "propertyChainAxiom",
+         "Property chain axiom", subj),
+        ("property_chain", "info", pred == OWL_NS + "equivalentProperty",
+         "Equivalent property", subj),
+        ("property_chain", "info", pred == OWL_NS + "inverseOf",
+         "Inverse property", subj),
+        ("class_axiom", "info", (pred == OWL_NS + "equivalentClass") & iri,
+         "Equivalent class", subj),
+        ("class_axiom", "info", (pred == OWL_NS + "disjointWith") & iri,
+         "Disjoint classes", subj),
+        ("individual", "info", pred == OWL_NS + "sameAs",
+         "owl:sameAs statement", subj),
+        ("individual", "info", pred == OWL_NS + "differentFrom",
+         "owl:differentFrom statement", subj),
     ]
 
-    chains = [
-        _issue(t.where(F.col("pred") == OWL_NS + "propertyChainAxiom"),
-               "property_chain", "warning",
-               F.lit("Property chain axiom"), F.col("subj")),
-        _issue(t.where(F.col("pred") == OWL_NS + "equivalentProperty"),
-               "property_chain", "info",
-               F.lit("Equivalent property"), F.col("subj")),
-        _issue(t.where(F.col("pred") == OWL_NS + "inverseOf"),
-               "property_chain", "info",
-               F.lit("Inverse property"), F.col("subj")),
-    ]
+    # shared aggregate: per subject, the types and predicates the subject
+    # rules read, and its unsupported XSD ranges
+    unsupported = (pred == RDFS_RANGE) & obj.startswith(XSD_NS) & \
+        ~obj.isin(SUPPORTED_XSD)
+    by_subj = (triples
+               .where(((pred == RDF_TYPE) & obj.isin(_TYPES_READ)) |
+                      pred.isin([OWL_NS + k for k in _COMPLEX] +
+                                [RDFS_DOMAIN, RDFS_RANGE]))
+               .groupBy("subj")
+               .agg(F.collect_set(F.when(pred == RDF_TYPE, obj))
+                    .alias("types"),
+                    F.collect_set("pred").alias("preds"),
+                    F.collect_set(F.when(unsupported, obj))
+                    .alias("bad_ranges")))
+    types, preds = F.col("types"), F.col("preds")
 
-    axioms = [
-        _issue(t.where((F.col("pred") == OWL_NS + "equivalentClass") &
-                       ~F.col("subj").startswith("_:")),
-               "class_axiom", "info", F.lit("Equivalent class"),
-               F.col("subj")),
-        _issue(t.where((F.col("pred") == OWL_NS + "disjointWith") &
-                       ~F.col("subj").startswith("_:")),
-               "class_axiom", "info", F.lit("Disjoint classes"),
-               F.col("subj")),
-    ]
+    def is_a(type_uri):
+        return F.array_contains(types, type_uri)
 
-    # missing domain/range on declared properties
-    props = (_subjects_of_type(t, OWL_DATATYPE_PROPERTY)
-             .unionByName(_subjects_of_type(t, OWL_OBJECT_PROPERTY))
-             .unionByName(_subjects_of_type(t, RDF_PROPERTY))
-             .where(~F.col("subj").startswith("_:"))
-             .dropDuplicates())
-    doms = t.where(F.col("pred") == RDFS_DOMAIN).select("subj").dropDuplicates()
-    rngs = t.where(F.col("pred") == RDFS_RANGE).select("subj").dropDuplicates()
-    missing = [
-        _issue(props.join(doms, "subj", "left_anti"),
-               "missing_signature", "warning",
-               F.concat(F.lit("Property '"), name,
-                        F.lit("' missing domain")), F.col("subj")),
-        _issue(props.join(rngs, "subj", "left_anti"),
-               "missing_signature", "warning",
-               F.concat(F.lit("Property '"), name,
-                        F.lit("' missing range")), F.col("subj")),
+    is_prop = F.arrays_overlap(
+        types, F.array(*map(F.lit, _PROPERTY_TYPES))) & iri
+    per_subject = [
+        *[("complex_class_expression", "warning",
+           F.array_contains(preds, OWL_NS + kind),
+           f"owl:{kind} class expression", subj)
+          for kind in _COMPLEX],  # unionOf is supported (validator :347)
+        ("property_restriction", "warning", is_a(OWL_RESTRICTION),
+         "OWL restriction", subj),
+        *[("property_characteristic", "info", is_a(OWL_NS + c) & iri,
+           F.concat(F.lit(f"Property characteristic '{c}' on '"), name,
+                    F.lit("'")), subj)
+          for c in _CHARACTERISTICS],
+        ("missing_signature", "warning",
+         is_prop & ~F.array_contains(preds, RDFS_DOMAIN),
+         F.concat(F.lit("Property '"), name, F.lit("' missing domain")),
+         subj),
+        ("missing_signature", "warning",
+         is_prop & ~F.array_contains(preds, RDFS_RANGE),
+         F.concat(F.lit("Property '"), name, F.lit("' missing range")),
+         subj),
+        ("individual", "info", is_a(OWL_NS + "NamedIndividual"),
+         "Named individual", subj),
+        ("annotation", "info", is_a(OWL_NS + "AnnotationProperty"),
+         "Custom annotation property", subj),
+        ("reification", "warning", is_a(RDF_NS + "Statement"),
+         "Reified statement", subj),
     ]
-
-    unsupported_dt = _issue(
-        t.where((F.col("pred") == RDFS_RANGE) &
-                F.col("obj").startswith(XSD_NS) &
-                ~F.col("obj").isin(SUPPORTED_XSD))
-        .join(_subjects_of_type(t, OWL_DATATYPE_PROPERTY), "subj",
-              "left_semi")
-        .select("subj", "obj").dropDuplicates(),
+    bad_datatypes = _each(
+        F.when(is_a(OWL_DATATYPE_PROPERTY), F.col("bad_ranges")),
         "unsupported_datatype", "info",
-        F.concat(F.lit("Unsupported XSD datatype: "), local_name(F.col("obj"))),
-        F.col("subj"))
+        lambda o: F.concat(F.lit("Unsupported XSD datatype: "),
+                           local_name(o)), subj)
 
-    individuals = [
-        _issue(_subjects_of_type(t, OWL_NS + "NamedIndividual"),
-               "individual", "info", F.lit("Named individual"),
-               F.col("subj")),
-        _issue(t.where(F.col("pred") == OWL_NS + "sameAs"),
-               "individual", "info", F.lit("owl:sameAs statement"),
-               F.col("subj")),
-        _issue(t.where(F.col("pred") == OWL_NS + "differentFrom"),
-               "individual", "info", F.lit("owl:differentFrom statement"),
-               F.col("subj")),
-    ]
-
-    annotations = _issue(
-        _subjects_of_type(t, OWL_NS + "AnnotationProperty"),
-        "annotation", "info", F.lit("Custom annotation property"),
-        F.col("subj"))
-
-    reification = _issue(
-        _subjects_of_type(t, RDF_NS + "Statement"),
-        "reification", "warning", F.lit("Reified statement"),
-        F.col("subj"))
-
-    out = imports
-    for df in (complex_exprs + [restrictions] + characteristics + chains +
-               axioms + missing + [unsupported_dt] + individuals +
-               [annotations, reification]):
-        out = out.unionByName(df)
-    return out
+    return (_evaluate(triples, per_triple)
+            .unionByName(_evaluate(by_subj, per_subject, bad_datatypes)))
 
 
 def can_import_seamlessly(issues: DataFrame) -> bool:
@@ -181,90 +186,56 @@ def dtdl_issues(interfaces: DataFrame) -> DataFrame:
     duplicate DTMIs, inheritance cycles (via bounded closure), orphan
     relationship targets, missing component schemas.
     """
-    good = interfaces.where(F.col("parse_error").isNull())
-    dtmis = good.select("dtmi").dropDuplicates()
-
-    bad_dtmi = _issue(
-        good.where(~F.col("dtmi").rlike(DTMI_REGEX))
-        .select("dtmi").dropDuplicates(),
-        "dtdl:dtmi_format", "error",
-        F.concat(F.lit("Invalid DTMI: "), F.col("dtmi")), F.col("dtmi"))
-
-    long_dtmi = _issue(
-        good.where(F.length("dtmi") > MAX_INTERFACE_DTMI_LENGTH)
-        .select("dtmi").dropDuplicates(),
-        "dtdl:dtmi_length", "error",
-        F.concat(F.lit("Interface DTMI exceeds 128 chars: "), F.col("dtmi")),
-        F.col("dtmi"))
-
-    dupes = _issue(
-        good.groupBy("dtmi").agg(F.count("*").alias("n"))
-        .where(F.col("n") > 1)
-        .select("dtmi"),
-        "dtdl:duplicate_dtmi", "error",
-        F.concat(F.lit("Duplicate DTMI: "), F.col("dtmi")), F.col("dtmi"))
-
-    # inheritance cycles: dtmi reaches itself through extends edges
     from .dtdl import ancestor_closure
-    closure = ancestor_closure(good)
-    cycles = _issue(
-        closure.where(F.col("dtmi") == F.col("ancestor"))
-        .select("dtmi").dropDuplicates()
-        .withColumnRenamed("dtmi", "subj"),
-        "dtdl:inheritance_cycle", "error",
-        F.concat(F.lit("Inheritance cycle through: "), F.col("subj")),
-        F.col("subj"))
+    good = interfaces.where(F.col("parse_error").isNull())
+    cyclic = (ancestor_closure(good)
+              .where(F.col("dtmi") == F.col("ancestor"))
+              .select("dtmi", F.lit(True).alias("cyclic")).dropDuplicates())
+    # shared aggregate: one row per DTMI with its row count and cycle flag
+    by_dtmi = good.groupBy("dtmi").count().join(cyclic, "dtmi", "left")
+    dtmi = F.col("dtmi")
+    per_dtmi = [
+        ("dtdl:dtmi_format", "error", ~dtmi.rlike(DTMI_REGEX),
+         F.concat(F.lit("Invalid DTMI: "), dtmi), dtmi),
+        ("dtdl:dtmi_length", "error",
+         F.length(dtmi) > MAX_INTERFACE_DTMI_LENGTH,
+         F.concat(F.lit(f"Interface DTMI exceeds "
+                        f"{MAX_INTERFACE_DTMI_LENGTH} chars: "), dtmi), dtmi),
+        ("dtdl:duplicate_dtmi", "error", F.col("count") > 1,
+         F.concat(F.lit("Duplicate DTMI: "), dtmi), dtmi),
+        ("dtdl:inheritance_cycle", "error", F.col("cyclic"),
+         F.concat(F.lit("Inheritance cycle through: "), dtmi), dtmi),
+    ]
 
-    contents = (good.select("dtmi", F.explode("contents").alias("c"))
-                .select("dtmi", "c.*"))
-    rel_targets = (contents
-                   .where((F.col("content_type") == "Relationship") &
-                          F.col("target").isNotNull())
-                   .select("dtmi", F.col("target").alias("ref"),
-                           F.col("name")))
-    orphans = _issue(
-        rel_targets.join(dtmis.withColumnRenamed("dtmi", "ref"),
-                         "ref", "left_anti")
-        .withColumnRenamed("dtmi", "subj"),
-        "dtdl:orphan_relationship_target", "warning",
-        F.concat(F.lit("Relationship '"), F.col("name"),
-                 F.lit("' targets undefined interface "), F.col("ref")),
-        F.col("ref"))
-
-    comp_refs = (contents
-                 .where(F.col("content_type") == "Component")
-                 .select("dtmi", F.col("schema_kind").alias("ref"),
-                         F.col("name")))
-    missing_comp = _issue(
-        comp_refs.join(dtmis.withColumnRenamed("dtmi", "ref"),
-                       "ref", "left_anti")
-        .withColumnRenamed("dtmi", "subj"),
-        "dtdl:missing_component_schema", "warning",
-        F.concat(F.lit("Component '"), F.col("name"),
-                 F.lit("' schema not defined in ontology: "), F.col("ref")),
-        F.col("ref"))
-
-    out = bad_dtmi
-    for df in (long_dtmi, dupes, cycles, orphans, missing_comp):
-        out = out.unionByName(df)
-    return out
-
-
-def definition_size_estimate(entity_types: DataFrame,
-                             relationship_types: DataFrame) -> int:
-    """A7: estimated serialized definition bytes vs the 1 MB Fabric cap
-    (reference: fabric_limits.py:294-367) — sum of JSON payload lengths."""
-    from ..sources.sinks import definition_parts_df
-    parts = definition_parts_df(entity_types, relationship_types)
-    row = parts.agg(F.sum(F.length("payload")).alias("bytes")).first()
-    return int(row["bytes"] or 0)
+    kind = F.col("content_type")
+    contents = (good.select(F.explode("contents").alias("c")).select("c.*")
+                .withColumn("ref",
+                            F.when(kind == "Relationship", F.col("target"))
+                            .when(kind == "Component", F.col("schema_kind")))
+                .join(by_dtmi.select(F.col("dtmi").alias("ref"),
+                                     F.lit(True).alias("known")),
+                      "ref", "left"))
+    ref, item, unknown = F.col("ref"), F.col("name"), F.col("known").isNull()
+    per_content = [
+        ("dtdl:orphan_relationship_target", "warning",
+         (kind == "Relationship") & ref.isNotNull() & unknown,
+         F.concat(F.lit("Relationship '"), item,
+                  F.lit("' targets undefined interface "), ref), ref),
+        ("dtdl:missing_component_schema", "warning",
+         (kind == "Component") & unknown,
+         F.concat(F.lit("Component '"), item,
+                  F.lit("' schema not defined in ontology: "), ref), ref),
+    ]
+    return (_evaluate(by_dtmi, per_dtmi)
+            .unionByName(_evaluate(contents, per_content)))
 
 
 # ---------------------------------------------------------------------------
 # Fabric definition structural schema (reference:
-# src/core/validators/fabric_schema.py:40-530) — re-validates the engine's
-# OWN serialized output (sources.sinks.definition_parts_df), catching sink
-# regressions before upload
+# src/core/validators/fabric_schema.py:40-530; caps: fabric_limits.py) —
+# re-validates the engine's OWN serialized output
+# (sources.sinks.definition_parts_df), catching sink regressions before
+# upload
 # ---------------------------------------------------------------------------
 
 FABRIC_VALUE_TYPES = ["String", "BigInt", "Double", "Decimal", "Boolean",
@@ -275,8 +246,6 @@ FABRIC_RESERVED_NAMESPACES = ["system", "fabric", "microsoft"]
 FABRIC_NAME_MAX_LENGTH = 256
 FABRIC_ID_RX = "^[0-9]+$"
 FABRIC_NAME_RX = "^[A-Za-z][A-Za-z0-9_]*$"
-FABRIC_MAX_TYPES = 500
-FABRIC_MAX_PROPS_PER_ENTITY = 200
 
 _PROP_T = "array<struct<id:string,name:string,valueType:string>>"
 _ENT_PAYLOAD_T = (
@@ -287,6 +256,9 @@ _ENT_PAYLOAD_T = (
 _REL_PAYLOAD_T = (
     "struct<id:string,namespace:string,name:string,namespaceType:string,"
     "source:struct<entityTypeId:string>,target:struct<entityTypeId:string>>")
+_ENT_REQUIRED = ["id", "name", "namespace", "namespaceType", "visibility"]
+_REL_REQUIRED = ["id", "name", "namespace", "namespaceType", "source",
+                 "target"]
 
 
 def definition_schema_issues(parts: DataFrame) -> DataFrame:
@@ -295,169 +267,145 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
     Spark twin of the reference FabricSchemaValidator over the emitted
     parts: required keys, numeric 13-digit-style ids, name length/pattern,
     reserved namespaces, namespaceType/visibility enums, property
-    valueType enum, per-entity property cap, path↔payload id agreement,
-    endpoint shape, endpoint ids resolving to emitted entities, and the
-    500-type caps.
+    valueType enum, per-entity property and id-part caps, path↔payload id
+    agreement, endpoint shape, endpoint ids resolving to emitted entities,
+    the 500-per-kind type caps and the definition size cap.
     """
     # try_to_binary → NULL on malformed base64 (unbase64 throws task errors)
-    decoded = F.try_to_binary("payload", F.lit("base64")).cast("string")
+    text = F.try_to_binary("payload", F.lit("base64")).cast("string")
     is_ent = F.col("path").startswith("EntityTypes/")
     is_rel = F.col("path").startswith("RelationshipTypes/")
-    path_id = F.regexp_extract("path", "^[A-Za-z]+/([^/]+)/definition", 1)
+    decoded = parts.select(
+        "path", "payloadType",
+        F.regexp_extract("path", "^[A-Za-z]+/([^/]+)/definition", 1)
+        .alias("path_id"),
+        F.when(is_ent, F.from_json(text, _ENT_PAYLOAD_T)).alias("e"),
+        F.when(is_rel, F.from_json(text, _REL_PAYLOAD_T)).alias("r"))
+    e, r, path, path_id = (F.col("e"), F.col("r"), F.col("path"),
+                           F.col("path_id"))
 
-    bad_ptype = _issue(
-        parts.where(F.col("payloadType") != "InlineBase64"),
-        "fabric:payload_type", "warning",
-        F.concat(F.lit("Unexpected payloadType '"), F.col("payloadType"),
-                 F.lit("', expected 'InlineBase64'")), F.col("path"))
+    def shared(field):  # a key both payload kinds carry
+        return F.coalesce(e[field], r[field])
 
-    ents = (parts.where(is_ent)
-            .select("path", path_id.alias("path_id"),
-                    F.from_json(decoded, _ENT_PAYLOAD_T).alias("d")))
-    rels = (parts.where(is_rel)
-            .select("path", path_id.alias("path_id"),
-                    F.from_json(decoded, _REL_PAYLOAD_T).alias("d")))
+    def any_null(d, fields):
+        return reduce(or_, [d[f].isNull() for f in fields])
 
-    bad_payload = _issue(
-        ents.where(F.col("d").isNull()).select("path")
-        .unionByName(rels.where(F.col("d").isNull()).select("path")),
-        "fabric:bad_payload", "error",
-        F.lit("Payload is not valid base64-encoded JSON"), F.col("path"))
+    pid, name = shared("id"), shared("name")
+    ns, ns_type = shared("namespace"), shared("namespaceType")
+    ptype = F.col("payloadType")
+    vis, base = e["visibility"], e["baseEntityTypeId"]
+    empty_props = F.array().cast(_PROP_T)
+    props = F.concat(F.coalesce(e["properties"], empty_props),
+                     F.coalesce(e["timeseriesProperties"], empty_props))
+    per_part = [
+        ("fabric:payload_type", "warning", ptype != "InlineBase64",
+         F.concat(F.lit("Unexpected payloadType '"), ptype,
+                  F.lit("', expected 'InlineBase64'")), path),
+        ("fabric:bad_payload", "error",
+         (is_ent & e.isNull()) | (is_rel & r.isNull()),
+         "Payload is not valid base64-encoded JSON", path),
+        ("fabric:missing_required", "error",
+         e.isNotNull() & any_null(e, _ENT_REQUIRED),
+         f"EntityType payload missing one of {_ENT_REQUIRED}", path),
+        ("fabric:missing_required", "error",
+         r.isNotNull() & any_null(r, _REL_REQUIRED),
+         f"RelationshipType payload missing one of {_REL_REQUIRED}", path),
+        ("fabric:nonnumeric_id", "warning",
+         pid.isNotNull() & ~pid.rlike(FABRIC_ID_RX),
+         F.concat(F.lit("ID '"), pid, F.lit("' is not numeric")), path),
+        ("fabric:path_id_mismatch", "error",
+         pid.isNotNull() & (pid != path_id),
+         F.concat(F.lit("Part path id '"), path_id,
+                  F.lit("' != payload id '"), pid, F.lit("'")), path),
+        ("fabric:name_too_long", "error",
+         F.length(name) > FABRIC_NAME_MAX_LENGTH,
+         f"Name exceeds {FABRIC_NAME_MAX_LENGTH} chars", path),
+        ("fabric:invalid_name", "warning",
+         name.isNotNull() & ~name.rlike(FABRIC_NAME_RX),
+         F.concat(F.lit("Name '"), name,
+                  F.lit("' should start with a letter and contain only "
+                        "letters/numbers/underscores")), path),
+        ("fabric:reserved_namespace", "error",
+         F.lower(ns).isin(FABRIC_RESERVED_NAMESPACES),
+         F.concat(F.lit("Cannot use reserved namespace '"), ns, F.lit("'")),
+         path),
+        ("fabric:invalid_namespace_type", "error",
+         ns_type.isNotNull() & ~ns_type.isin(FABRIC_NAMESPACE_TYPES),
+         F.concat(F.lit("Invalid namespaceType '"), ns_type, F.lit("'")),
+         path),
+        ("fabric:invalid_visibility", "error",
+         vis.isNotNull() & ~vis.isin(FABRIC_VISIBILITY_VALUES),
+         F.concat(F.lit("Invalid visibility '"), vis, F.lit("'")), path),
+        ("fabric:nonnumeric_id", "warning",
+         base.isNotNull() & ~base.rlike(FABRIC_ID_RX),
+         F.concat(F.lit("baseEntityTypeId '"), base,
+                  F.lit("' is not numeric")), path),
+        ("fabric:too_many_properties", "error",
+         F.size(F.coalesce(e["properties"], empty_props))
+         > MAX_PROPERTIES_PER_ENTITY,
+         F.concat(F.lit("Too many properties ("), F.size(e["properties"]),
+                  F.lit(f") exceeds limit of {MAX_PROPERTIES_PER_ENTITY}")),
+         path),
+        ("fabric:too_many_id_parts", "error",
+         F.size(e["entityIdParts"]) > MAX_ENTITY_ID_PARTS,
+         F.concat(F.lit("Too many entityIdParts ("),
+                  F.size(e["entityIdParts"]),
+                  F.lit(f") exceeds limit of {MAX_ENTITY_ID_PARTS}")), path),
+        ("fabric:endpoint_missing", "error",
+         r.isNotNull() & (r["source"]["entityTypeId"].isNull() |
+                          r["target"]["entityTypeId"].isNull()),
+         "source/target missing entityTypeId", path),
+    ]
+    per_property = [
+        _each(F.filter(props, lambda p: p["id"].isNull() |
+                       p["name"].isNull() | p["valueType"].isNull()),
+              "fabric:property_missing_field", "error",
+              lambda p: F.lit("Property missing id/name/valueType"), path),
+        _each(F.filter(props, lambda p: p["valueType"].isNotNull() &
+                       ~p["valueType"].isin(FABRIC_VALUE_TYPES)),
+              "fabric:invalid_value_type", "error",
+              lambda p: F.concat(F.lit("Invalid valueType '"),
+                                 p["valueType"], F.lit("' on property '"),
+                                 p["name"], F.lit("'")), path),
+    ]
 
-    def _missing(df, fields, kind):
-        cond = None
-        for f in fields:
-            c = F.col(f"d.{f}").isNull()
-            cond = c if cond is None else (cond | c)
-        return _issue(
-            df.where(F.col("d").isNotNull()).where(cond),
-            "fabric:missing_required", "error",
-            F.lit(f"{kind} payload missing one of {fields}"), F.col("path"))
+    # cross-row: relationship endpoints that no entity part defines
+    eid = F.col("eid")
+    unknown_ends = (
+        decoded.where(r.isNotNull())
+        .select("path", F.explode(F.array(r["source"]["entityTypeId"],
+                                          r["target"]["entityTypeId"]))
+                .alias("eid"))
+        .join(decoded.where(e.isNotNull()).select(e["id"].alias("eid")),
+              "eid", "left_anti"))
+    per_unknown = [
+        ("fabric:unknown_endpoint", "warning", eid.isNotNull(),
+         F.concat(F.lit("Endpoint references unknown entityTypeId '"), eid,
+                  F.lit("'")), path)]
 
-    ent_missing = _missing(ents, ["id", "name", "namespace",
-                                  "namespaceType", "visibility"],
-                           "EntityType")
-    rel_missing = _missing(rels, ["id", "name", "namespace",
-                                  "namespaceType", "source", "target"],
-                           "RelationshipType")
-
-    live_ents = ents.where(F.col("d").isNotNull())
-    live_rels = rels.where(F.col("d").isNotNull())
-    shared_cols = ["path", "path_id", "d.id", "d.name", "d.namespace",
-                   "d.namespaceType"]
-    live = (live_ents.select(*shared_cols)
-            .unionByName(live_rels.select(*shared_cols)))
-    nonnum_id = _issue(
-        live.where(F.col("id").isNotNull() &
-                   ~F.col("id").rlike(FABRIC_ID_RX)),
-        "fabric:nonnumeric_id", "warning",
-        F.concat(F.lit("ID '"), F.col("id"), F.lit("' is not numeric")),
-        F.col("path"))
-    path_mismatch = _issue(
-        live.where(F.col("id").isNotNull() &
-                   (F.col("id") != F.col("path_id"))),
-        "fabric:path_id_mismatch", "error",
-        F.concat(F.lit("Part path id '"), F.col("path_id"),
-                 F.lit("' != payload id '"), F.col("id"), F.lit("'")),
-        F.col("path"))
-    long_name = _issue(
-        live.where(F.length("name") > FABRIC_NAME_MAX_LENGTH),
-        "fabric:name_too_long", "error",
-        F.concat(F.lit("Name exceeds "), F.lit(FABRIC_NAME_MAX_LENGTH),
-                 F.lit(" chars")), F.col("path"))
-    bad_name = _issue(
-        live.where(F.col("name").isNotNull() &
-                   ~F.col("name").rlike(FABRIC_NAME_RX)),
-        "fabric:invalid_name", "warning",
-        F.concat(F.lit("Name '"), F.col("name"),
-                 F.lit("' should start with a letter and contain only "
-                       "letters/numbers/underscores")), F.col("path"))
-    reserved_ns = _issue(
-        live.where(F.lower("namespace").isin(FABRIC_RESERVED_NAMESPACES)),
-        "fabric:reserved_namespace", "error",
-        F.concat(F.lit("Cannot use reserved namespace '"),
-                 F.col("namespace"), F.lit("'")), F.col("path"))
-    bad_nstype = _issue(
-        live.where(F.col("namespaceType").isNotNull() &
-                   ~F.col("namespaceType").isin(FABRIC_NAMESPACE_TYPES)),
-        "fabric:invalid_namespace_type", "error",
-        F.concat(F.lit("Invalid namespaceType '"), F.col("namespaceType"),
-                 F.lit("'")), F.col("path"))
-    bad_vis = _issue(
-        live_ents.where(F.col("d.visibility").isNotNull() &
-                        ~F.col("d.visibility").isin(FABRIC_VISIBILITY_VALUES)),
-        "fabric:invalid_visibility", "error",
-        F.concat(F.lit("Invalid visibility '"), F.col("d.visibility"),
-                 F.lit("'")), F.col("path"))
-    nonnum_base = _issue(
-        live_ents.where(F.col("d.baseEntityTypeId").isNotNull() &
-                        ~F.col("d.baseEntityTypeId").rlike(FABRIC_ID_RX)),
-        "fabric:nonnumeric_id", "warning",
-        F.concat(F.lit("baseEntityTypeId '"), F.col("d.baseEntityTypeId"),
-                 F.lit("' is not numeric")), F.col("path"))
-    too_many_props = _issue(
-        live_ents.where(F.size(F.coalesce("d.properties",
-                                          F.array().cast(_PROP_T)))
-                        > FABRIC_MAX_PROPS_PER_ENTITY),
-        "fabric:too_many_properties", "error",
-        F.concat(F.lit("Too many properties ("),
-                 F.size("d.properties"),
-                 F.lit(f") exceeds limit of {FABRIC_MAX_PROPS_PER_ENTITY}")),
-        F.col("path"))
-
-    all_props = (live_ents.select(
-        "path", F.explode(F.concat(
-            F.coalesce("d.properties", F.array().cast(_PROP_T)),
-            F.coalesce("d.timeseriesProperties", F.array().cast(_PROP_T))))
-        .alias("p")))
-    bad_prop = _issue(
-        all_props.where(F.col("p.id").isNull() | F.col("p.name").isNull() |
-                        F.col("p.valueType").isNull()),
-        "fabric:property_missing_field", "error",
-        F.lit("Property missing id/name/valueType"), F.col("path"))
-    bad_vtype = _issue(
-        all_props.where(F.col("p.valueType").isNotNull() &
-                        ~F.col("p.valueType").isin(FABRIC_VALUE_TYPES)),
-        "fabric:invalid_value_type", "error",
-        F.concat(F.lit("Invalid valueType '"), F.col("p.valueType"),
-                 F.lit("' on property '"), F.col("p.name"), F.lit("'")),
-        F.col("path"))
-
-    bad_endpoint = _issue(
-        live_rels.where(F.col("d.source.entityTypeId").isNull() |
-                        F.col("d.target.entityTypeId").isNull()),
-        "fabric:endpoint_missing", "error",
-        F.lit("source/target missing entityTypeId"), F.col("path"))
-    ent_ids = live_ents.select(F.col("d.id").alias("eid")).dropDuplicates()
-    unk_endpoint = _issue(
-        live_rels.select("path",
-                         F.explode(F.array("d.source.entityTypeId",
-                                           "d.target.entityTypeId"))
-                         .alias("eid"))
-        .where(F.col("eid").isNotNull())
-        .join(ent_ids, "eid", "left_anti"),
-        "fabric:unknown_endpoint", "warning",
-        F.concat(F.lit("Endpoint references unknown entityTypeId '"),
-                 F.col("eid"), F.lit("'")), F.col("path"))
-
-    over_cap = _issue(
-        parts.where(is_ent | is_rel)
-        .groupBy(F.when(is_ent, F.lit("EntityTypes"))
-                 .otherwise(F.lit("RelationshipTypes")).alias("kind"))
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > FABRIC_MAX_TYPES),
-        "fabric:too_many_types", "error",
-        F.concat(F.lit("Too many "), F.col("kind"), F.lit(": "), F.col("n"),
-                 F.lit(f" exceeds limit of {FABRIC_MAX_TYPES}")),
-        F.col("kind"))
-
-    out = bad_ptype
-    for df in (bad_payload, ent_missing, rel_missing, nonnum_id,
-               path_mismatch, long_name, bad_name, reserved_ns, bad_nstype,
-               bad_vis, nonnum_base, too_many_props, bad_prop, bad_vtype,
-               bad_endpoint, unk_endpoint, over_cap):
-        out = out.unionByName(df)
-    return out
+    # shared aggregate: the definition-wide caps
+    n_ent, n_rel, n_bytes = F.col("n_ent"), F.col("n_rel"), F.col("bytes")
+    totals = parts.agg(F.count(F.when(is_ent, 1)).alias("n_ent"),
+                       F.count(F.when(is_rel, 1)).alias("n_rel"),
+                       F.sum(F.length("payload")).alias("bytes"))
+    per_definition = [
+        ("fabric:too_many_types", "error", n_ent > MAX_ENTITY_TYPES,
+         F.concat(F.lit("Too many EntityTypes: "), n_ent,
+                  F.lit(f" exceeds limit of {MAX_ENTITY_TYPES}")),
+         "EntityTypes"),
+        ("fabric:too_many_types", "error", n_rel > MAX_RELATIONSHIP_TYPES,
+         F.concat(F.lit("Too many RelationshipTypes: "), n_rel,
+                  F.lit(f" exceeds limit of {MAX_RELATIONSHIP_TYPES}")),
+         "RelationshipTypes"),
+        ("fabric:definition_too_large", "error",
+         n_bytes > MAX_DEFINITION_BYTES,
+         F.concat(F.lit("Definition payloads total "), n_bytes,
+                  F.lit(f" bytes, exceeds limit of {MAX_DEFINITION_BYTES}")),
+         None),
+    ]
+    return (_evaluate(decoded, per_part, *per_property)
+            .unionByName(_evaluate(unknown_ends, per_unknown))
+            .unionByName(_evaluate(totals, per_definition)))
 
 
 # ---------------------------------------------------------------------------
@@ -471,35 +419,22 @@ CDM_RESERVED_NAMES = [            # reference: cdm_validator.py:61-64
     "entity", "relationship", "property", "system", "internal"]
 
 
-def _name_issues(named: DataFrame, item_type: str,
-                 name_col: str = "name") -> DataFrame:
-    """Fabric naming rules over a (name[, uri]) frame
-    (reference: cdm_validator.py:498-548): length, first character,
-    spaces, reserved names."""
-    n = F.col(name_col)
-    uri = F.col("uri") if "uri" in named.columns else n
-    too_long = _issue(
-        named.where(F.length(n) > CDM_MAX_NAME_LENGTH),
-        "cdm:name_too_long", "error",
-        F.concat(F.lit(f"{item_type} name exceeds maximum length ("),
-                 F.length(n), F.lit(f" > {CDM_MAX_NAME_LENGTH})")), uri)
-    bad_start = _issue(
-        named.where(~n.rlike("^[a-zA-Z_]")),
-        "cdm:invalid_name_start", "warning",
-        F.concat(F.lit(f"{item_type} name '"), n,
-                 F.lit("' should start with letter or underscore")), uri)
-    spaces = _issue(
-        named.where(n.contains(" ")),
-        "cdm:name_has_spaces", "warning",
-        F.concat(F.lit(f"{item_type} name '"), n,
-                 F.lit("' contains spaces")), uri)
-    reserved = _issue(
-        named.where(F.lower(n).isin(CDM_RESERVED_NAMES)),
-        "cdm:reserved_name", "info",
-        F.concat(F.lit(f"{item_type} name '"), n,
-                 F.lit("' may conflict with reserved names")), uri)
-    return (too_long.unionByName(bad_start).unionByName(spaces)
-            .unionByName(reserved))
+def _name_rules(item_type: str, n: Column, uri: Column) -> list:
+    """Fabric naming rules (reference: cdm_validator.py:498-548): length,
+    first character, spaces, reserved names."""
+    def said(text):
+        return F.concat(F.lit(f"{item_type} name '"), n, F.lit(text))
+    return [
+        ("cdm:name_too_long", "error", F.length(n) > CDM_MAX_NAME_LENGTH,
+         F.concat(F.lit(f"{item_type} name exceeds maximum length ("),
+                  F.length(n), F.lit(f" > {CDM_MAX_NAME_LENGTH})")), uri),
+        ("cdm:invalid_name_start", "warning", ~n.rlike("^[a-zA-Z_]"),
+         said("' should start with letter or underscore"), uri),
+        ("cdm:name_has_spaces", "warning", n.contains(" "),
+         said("' contains spaces"), uri),
+        ("cdm:reserved_name", "info", F.lower(n).isin(CDM_RESERVED_NAMES),
+         said("' may conflict with reserved names"), uri),
+    ]
 
 
 def cdm_issues(cdm_entities: DataFrame,
@@ -517,176 +452,135 @@ def cdm_issues(cdm_entities: DataFrame,
     Schema-version checks are file-level CLI scope and intentionally out.
     """
     good = cdm_entities.where(F.col("parse_error").isNull())
+    entity = F.col("entity_name")
 
-    parse_errs = _issue(
-        cdm_entities.where(F.col("parse_error").isNotNull()),
-        "cdm:parse", "error", F.col("parse_error"),
-        F.concat(F.lit("doc://"), F.col("doc_id")))
+    # per entity row: the parse error, and one issue per flagged attribute
+    attrs = F.when(F.col("parse_error").isNull(), F.col("attributes"))
 
-    dupes = _issue(
-        good.groupBy("entity_name").agg(F.count("*").alias("n"))
-        .where(F.col("n") > 1).select("entity_name"),
-        "cdm:duplicate_entity", "warning",
-        F.concat(F.lit("Duplicate entity name: '"), F.col("entity_name"),
-                 F.lit("'")), F.col("entity_name"))
+    def attr_said(a, *parts):
+        return F.concat(F.lit("Attribute '"), a["name"], *parts)
 
-    no_attrs = _issue(
-        good.where(F.size(F.coalesce("attributes", F.array())) == 0)
-        .select("entity_name").dropDuplicates(),
-        "cdm:empty_entity", "warning",
-        F.concat(F.lit("Entity '"), F.col("entity_name"),
-                 F.lit("' has no attributes")), F.col("entity_name"))
+    per_row = [("cdm:parse", "error", F.col("parse_error").isNotNull(),
+                F.col("parse_error"),
+                F.concat(F.lit("doc://"), F.col("doc_id")))]
+    per_attribute = [
+        _each(F.filter(attrs, lambda a: a["is_entity_ref"]),
+              "cdm:entity_reference", "info",
+              lambda a: attr_said(a, F.lit(
+                  "' is an entity reference (modeled as relationship)")),
+              entity),
+        _each(F.filter(attrs, lambda a: a["raw_type"].isNull()),
+              "cdm:missing_data_type", "warning",
+              lambda a: attr_said(a, F.lit(
+                  "' missing data type, will default to String")), entity),
+        _each(F.filter(attrs, lambda a: a["raw_type"].isNotNull() &
+                       ~a["is_known_type"]),
+              "cdm:unknown_data_type", "warning",
+              lambda a: F.concat(F.lit("Unknown data type '"), a["raw_type"],
+                                 F.lit("' on attribute '"), a["name"],
+                                 F.lit("' will default to String")), entity),
+        _each(F.filter(attrs, lambda a: a["max_length"].isNotNull() &
+                       ((a["max_length"] <= 0) |
+                        (a["max_length"] > CDM_MAX_ATTR_LENGTH))),
+              "cdm:constraint_violation", "warning",
+              lambda a: F.concat(
+                  F.when(a["max_length"] <= 0,
+                         F.lit("Invalid maximum length: "))
+                  .otherwise(F.lit("Very large maximum length: ")),
+                  a["max_length"], F.lit(" on attribute '"), a["name"],
+                  F.lit("'")), entity),
+    ]
 
-    has_pk = F.exists("attributes", lambda a: a["is_pk"])
-    no_pk = _issue(
-        good.where(F.size(F.coalesce("attributes", F.array())) > 0)
-        .where(~has_pk)
-        .select("entity_name").dropDuplicates(),
-        "cdm:no_primary_key", "info",
-        F.concat(F.lit("Entity '"), F.col("entity_name"),
-                 F.lit("' has no primary key attribute")),
-        F.col("entity_name"))
+    # shared aggregate: one row per entity name
+    n_attrs = F.size(F.coalesce("attributes", F.array()))
+    by_entity = good.groupBy("entity_name").agg(
+        F.count("*").alias("n"),
+        F.bool_or(n_attrs == 0).alias("empty"),
+        F.bool_or((n_attrs > 0) &
+                  ~F.exists("attributes", lambda a: a["is_pk"]))
+        .alias("no_pk"),
+        F.collect_set("extends").alias("extends"))
 
-    attrs = (good.select("entity_name", F.explode("attributes").alias("a"))
-             .select("entity_name", "a.*"))
+    def entity_said(text):
+        return F.concat(F.lit("Entity '"), entity, F.lit(text))
 
-    ent_refs = _issue(
-        attrs.where(F.col("is_entity_ref"))
-        .select("entity_name", F.col("name").alias("attr")),
-        "cdm:entity_reference", "info",
-        F.concat(F.lit("Attribute '"), F.col("attr"),
-                 F.lit("' is an entity reference (modeled as relationship)")),
-        F.col("entity_name"))
-
-    dup_attrs = _issue(
-        attrs.groupBy("entity_name", "name").agg(F.count("*").alias("n"))
-        .where(F.col("n") > 1),
-        "cdm:duplicate_attribute", "error",
-        F.concat(F.lit("Duplicate attribute name: '"), F.col("name"),
-                 F.lit("' on entity '"), F.col("entity_name"), F.lit("'")),
-        F.col("entity_name"))
-
-    missing_type = _issue(
-        attrs.where(F.col("raw_type").isNull()),
-        "cdm:missing_data_type", "warning",
-        F.concat(F.lit("Attribute '"), F.col("name"),
-                 F.lit("' missing data type, will default to String")),
-        F.col("entity_name"))
-
-    unknown_type = _issue(
-        attrs.where(F.col("raw_type").isNotNull() & ~F.col("is_known_type")),
-        "cdm:unknown_data_type", "warning",
-        F.concat(F.lit("Unknown data type '"), F.col("raw_type"),
-                 F.lit("' on attribute '"), F.col("name"),
-                 F.lit("' will default to String")), F.col("entity_name"))
-
-    bad_maxlen = _issue(
-        attrs.where(F.col("max_length").isNotNull() &
-                    ((F.col("max_length") <= 0) |
-                     (F.col("max_length") > CDM_MAX_ATTR_LENGTH))),
-        "cdm:constraint_violation", "warning",
-        F.concat(F.when(F.col("max_length") <= 0,
-                        F.lit("Invalid maximum length: "))
-                 .otherwise(F.lit("Very large maximum length: ")),
-                 F.col("max_length"),
-                 F.lit(" on attribute '"), F.col("name"), F.lit("'")),
-        F.col("entity_name"))
-
-    self_extends = _issue(
-        good.where(F.col("extends") == F.col("entity_name"))
-        .select("entity_name").dropDuplicates(),
-        "cdm:circular_extends", "error",
-        F.concat(F.lit("Entity '"), F.col("entity_name"),
-                 F.lit("' cannot extend itself")), F.col("entity_name"))
-
-    extends_info = _issue(
-        good.where(F.col("extends").isNotNull() &
-                   (F.col("extends") != F.col("entity_name")))
-        .select("entity_name", "extends").dropDuplicates(),
+    per_entity = [
+        ("cdm:duplicate_entity", "warning", F.col("n") > 1,
+         F.concat(F.lit("Duplicate entity name: '"), entity, F.lit("'")),
+         entity),
+        ("cdm:empty_entity", "warning", F.col("empty"),
+         entity_said("' has no attributes"), entity),
+        ("cdm:no_primary_key", "info", F.col("no_pk"),
+         entity_said("' has no primary key attribute"), entity),
+        ("cdm:circular_extends", "error",
+         F.array_contains("extends", entity),
+         entity_said("' cannot extend itself"), entity),
+        *_name_rules("Entity", entity, entity),
+    ]
+    extends = _each(
+        F.filter("extends", lambda x: x != entity),
         "cdm:extends_dependency", "info",
-        F.concat(F.lit("Entity '"), F.col("entity_name"),
-                 F.lit("' extends '"), F.col("extends"),
-                 F.lit("' (inherited attributes flattened on conversion)")),
-        F.col("entity_name"))
+        lambda x: F.concat(F.lit("Entity '"), entity, F.lit("' extends '"),
+                           x, F.lit("' (inherited attributes flattened on "
+                                    "conversion)")), entity)
 
-    ent_names = _name_issues(
-        good.select(F.col("entity_name").alias("name")).dropDuplicates(),
-        "Entity")
-    attr_names = _name_issues(
-        attrs.select("name", F.col("entity_name").alias("uri"))
-        .dropDuplicates(), "Attribute")
+    # shared aggregate: one row per (entity, attribute name)
+    by_attr = (good.select("entity_name", F.explode("attributes").alias("a"))
+               .groupBy("entity_name", F.col("a.name").alias("name"))
+               .count())
+    attr = F.col("name")
+    per_attr_name = [
+        ("cdm:duplicate_attribute", "error", F.col("count") > 1,
+         F.concat(F.lit("Duplicate attribute name: '"), attr,
+                  F.lit("' on entity '"), entity, F.lit("'")), entity),
+        *_name_rules("Attribute", attr, entity),
+    ]
 
-    out = parse_errs
-    for df in (dupes, no_attrs, no_pk, ent_refs, dup_attrs, missing_type,
-               unknown_type, bad_maxlen, self_extends, extends_info,
-               ent_names, attr_names):
-        out = out.unionByName(df)
+    out = (_evaluate(cdm_entities, per_row, *per_attribute)
+           .unionByName(_evaluate(by_entity, per_entity, extends))
+           .unionByName(_evaluate(by_attr, per_attr_name)))
+    if cdm_rels is None:
+        return out
 
-    if cdm_rels is not None:
-        known = good.select("entity_name").dropDuplicates()
-        missing_from = _issue(
-            cdm_rels.where(F.col("from_entity").isNull() |
-                           (F.col("from_entity") == "")),
-            "cdm:missing_endpoint", "error",
-            F.lit("Relationship missing 'fromEntity'"), F.col("name"))
-        missing_to = _issue(
-            cdm_rels.where(F.col("to_entity").isNull() |
-                           (F.col("to_entity") == "")),
-            "cdm:missing_endpoint", "error",
-            F.lit("Relationship missing 'toEntity'"), F.col("name"))
-        unk_from = _issue(
-            cdm_rels.where(F.col("from_entity").isNotNull() &
-                           (F.col("from_entity") != ""))
-            .join(known.withColumnRenamed("entity_name", "from_entity"),
-                  "from_entity", "left_anti"),
-            "cdm:unknown_endpoint", "info",
-            F.concat(F.lit("Relationship references unknown source "
-                           "entity: '"), F.col("from_entity"), F.lit("'")),
-            F.col("name"))
-        unk_to = _issue(
-            cdm_rels.where(F.col("to_entity").isNotNull() &
-                           (F.col("to_entity") != ""))
-            .join(known.withColumnRenamed("entity_name", "to_entity"),
-                  "to_entity", "left_anti"),
-            "cdm:unknown_endpoint", "info",
-            F.concat(F.lit("Relationship references unknown target "
-                           "entity: '"), F.col("to_entity"), F.lit("'")),
-            F.col("name"))
-        # endpoint attribute existence (engine extension: the reference
-        # resolves endpoints by entity only; attribute checks catch
-        # fromEntityAttribute typos before sink time)
-        known_attrs = attrs.select("entity_name",
-                                   F.col("name").alias("attr_name"))
-        bad_from_attr = _issue(
-            cdm_rels.where(F.col("from_attribute") != "")
-            .join(known.withColumnRenamed("entity_name", "from_entity"),
-                  "from_entity", "left_semi")
-            .join(known_attrs
-                  .withColumnRenamed("entity_name", "from_entity")
-                  .withColumnRenamed("attr_name", "from_attribute"),
-                  ["from_entity", "from_attribute"], "left_anti"),
-            "cdm:unknown_endpoint_attribute", "warning",
-            F.concat(F.lit("Relationship '"), F.col("name"),
-                     F.lit("' references missing attribute '"),
-                     F.col("from_attribute"), F.lit("' on '"),
-                     F.col("from_entity"), F.lit("'")), F.col("name"))
-        bad_to_attr = _issue(
-            cdm_rels.where(F.col("to_attribute") != "")
-            .join(known.withColumnRenamed("entity_name", "to_entity"),
-                  "to_entity", "left_semi")
-            .join(known_attrs
-                  .withColumnRenamed("entity_name", "to_entity")
-                  .withColumnRenamed("attr_name", "to_attribute"),
-                  ["to_entity", "to_attribute"], "left_anti"),
-            "cdm:unknown_endpoint_attribute", "warning",
-            F.concat(F.lit("Relationship '"), F.col("name"),
-                     F.lit("' references missing attribute '"),
-                     F.col("to_attribute"), F.lit("' on '"),
-                     F.col("to_entity"), F.lit("'")), F.col("name"))
-        rel_names = _name_issues(
-            cdm_rels.select("name").where(F.col("name").isNotNull())
-            .dropDuplicates(), "Relationship")
-        for df in (missing_from, missing_to, unk_from, unk_to,
-                   bad_from_attr, bad_to_attr, rel_names):
-            out = out.unionByName(df)
-    return out
+    # one row per relationship endpoint, flagged against the known
+    # entities and attributes (attribute checks are an engine extension:
+    # the reference resolves endpoints by entity only)
+    def end(key, side, prefix):
+        return F.struct(F.lit(key).alias("key"), F.lit(side).alias("side"),
+                        F.col(f"{prefix}_entity").alias("entity"),
+                        F.col(f"{prefix}_attribute").alias("attribute"))
+
+    ends = (cdm_rels
+            .select("name", F.inline(F.array(end("fromEntity", "source",
+                                                 "from"),
+                                             end("toEntity", "target",
+                                                 "to"))))
+            .join(by_entity.select(entity.alias("entity"),
+                                   F.lit(True).alias("known_entity")),
+                  "entity", "left")
+            .join(by_attr.select(entity.alias("entity"),
+                                 F.col("name").alias("attribute"),
+                                 F.lit(True).alias("known_attribute")),
+                  ["entity", "attribute"], "left"))
+    rel, end_entity, end_attr = (F.col("name"), F.col("entity"),
+                                 F.col("attribute"))
+    named = end_entity.isNotNull() & (end_entity != "")
+    per_end = [
+        ("cdm:missing_endpoint", "error", ~named,
+         F.concat(F.lit("Relationship missing '"), F.col("key"), F.lit("'")),
+         rel),
+        ("cdm:unknown_endpoint", "info",
+         named & F.col("known_entity").isNull(),
+         F.concat(F.lit("Relationship references unknown "), F.col("side"),
+                  F.lit(" entity: '"), end_entity, F.lit("'")), rel),
+        ("cdm:unknown_endpoint_attribute", "warning",
+         (end_attr != "") & F.col("known_entity") &
+         F.col("known_attribute").isNull(),
+         F.concat(F.lit("Relationship '"), rel,
+                  F.lit("' references missing attribute '"), end_attr,
+                  F.lit("' on '"), end_entity, F.lit("'")), rel),
+    ]
+    rel_names = cdm_rels.select("name").dropDuplicates()
+    return (out.unionByName(_evaluate(ends, per_end))
+            .unionByName(_evaluate(rel_names,
+                                   _name_rules("Relationship", rel, rel))))

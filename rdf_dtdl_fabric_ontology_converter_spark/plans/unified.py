@@ -28,6 +28,9 @@ class UnifiedResult:
     relationship_types: DataFrame
     skipped_items: DataFrame
     rdf: PipelineResult
+    interfaces: DataFrame         # DTDL interface rows, before dedup
+    cdm_entities: DataFrame       # CDM entity rows, parse errors included
+    cdm_relationships: DataFrame
 
 
 def run_unified(spark: SparkSession, documents: DataFrame,
@@ -62,8 +65,9 @@ def run_unified(spark: SparkSession, documents: DataFrame,
         merged = dict(registry.overrides("dtdl"))
         merged.update(dtdl_modes.type_overrides or {})
         dtdl_modes = dataclasses.replace(dtdl_modes, type_overrides=merged)
-    d_ents, d_rels, d_skips = convert_interfaces(
-        extract_interfaces(documents), dtdl_modes)
+    # checkpointed: the conversion and the DTDL validator both read it
+    interfaces = extract_interfaces(documents).localCheckpoint(eager=False)
+    d_ents, d_rels, d_skips = convert_interfaces(interfaces, dtdl_modes)
 
     # CDM spans
     c_ent_rows, c_rel_rows = extract_cdm(
@@ -83,4 +87,5 @@ def run_unified(spark: SparkSession, documents: DataFrame,
     skipped = (rdf.skipped_items
                .unionByName(d_skips)
                .unionByName(c_skips))
-    return UnifiedResult(entity_types, relationship_types, skipped, rdf)
+    return UnifiedResult(entity_types, relationship_types, skipped, rdf,
+                         interfaces, c_ent_rows, c_rel_rows)

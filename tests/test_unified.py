@@ -91,16 +91,6 @@ def test_dtdl_validator_rules(spark):
     assert ("dtdl:missing_component_schema", "warning") in cats
 
 
-def test_definition_size_estimate(spark):
-    from rdf_dtdl_fabric_ontology_converter_spark.operators.validate import (
-        definition_size_estimate)
-    from rdf_dtdl_fabric_ontology_converter_spark.plans.pipeline import run_pipeline
-    docs = docs_from_payloads(spark, {"s": corpus.TTL["simple"]})
-    res = run_pipeline(spark, docs)
-    n = definition_size_estimate(res.entity_types, res.relationship_types)
-    assert 100 < n < 1_000_000
-
-
 def test_dedup_salting_equivalent(spark):
     """Salted and unsalted global dedup must produce identical triple sets;
     salted spreads a hot subject across partitions."""
