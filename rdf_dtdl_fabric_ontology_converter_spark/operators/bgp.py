@@ -30,12 +30,13 @@ Semantics (SPARQL 1.1 §18.3, BGP evaluation):
   EXPRESSION over constants: ``^iri`` (InversePath — edge direction
   flipped), ``iri1|iri2|...`` (AlternativePath — union of the branch
   edge sets; each branch may carry its own ``^``), and a trailing ``+``
-  (OneOrMorePath — the TRANSITIVE closure, computed with the shared
-  path-doubling closure, O(log depth) shuffle rounds —
-  ``classes.transitive_closure``). The grammar is unambiguous on raw
-  IRIs: ``|`` is not a legal IRI character (RFC 3987) and an IRI never
-  starts with ``^``. One documented divergence from SPARQL precedence:
-  a trailing ``+`` closes the WHOLE alternation
+  (OneOrMorePath — the TRANSITIVE closure, computed lazily by the shared
+  ``classes.transitive_closure``, whose edges and closure live in one
+  row, so the closed edge set must be schema-sized, e.g. subClassOf).
+  The grammar is unambiguous on raw IRIs: ``|`` is not a legal IRI
+  character (RFC 3987) and an IRI never starts with ``^``. One
+  documented divergence from SPARQL precedence: a trailing ``+`` closes
+  the WHOLE alternation
   (``(^a|b)+`` in SPARQL terms), because closing the union — e.g.
   ``(subClassOf|owl:equivalentClass)+`` — is the KG-construction use
   case; per-branch closure composes as separate patterns if needed.
@@ -157,13 +158,13 @@ def _path_edges(triples: DataFrame,
     the active graph's terms). Each branch is a pushed-down predicate
     filter; inverse branches swap the endpoint columns; alternation
     unions the branch edge sets; ``+``/``*`` close the union
-    transitively (path-doubling, O(log depth) rounds). ``+``/``*``/``?``
-    results are distinct (ALP yields sets); plain alternation keeps
-    multiset semantics. A raw IRI legitimately ENDING in ``+``/``*``/
-    ``?`` would be misread as a path — the same documented trade the
-    trailing-``+`` grammar already makes (RFC 3987 allows those chars;
-    they are vanishingly rare finals and the engine's IRIs come from
-    expanded CURIEs).
+    transitively (``classes.transitive_closure``, no driver action).
+    ``+``/``*``/``?`` results are distinct (ALP yields sets); plain
+    alternation keeps multiset semantics. A raw IRI legitimately ENDING
+    in ``+``/``*``/``?`` would be misread as a path — the same documented
+    trade the trailing-``+`` grammar already makes (RFC 3987 allows those
+    chars; they are vanishingly rare finals and the engine's IRIs come
+    from expanded CURIEs).
     """
     op = pexpr[-1] if pexpr[-1:] in "+*?" and len(pexpr) > 1 else ""
     core = pexpr[:-1] if op else pexpr
@@ -397,13 +398,17 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
     branches needing their own OPTIONAL/MINUS compose as two
     ``match_bgp`` calls plus ``unionByName(allowMissingColumns=True)``.
     ``minus`` is a list of MINUS pattern groups (SPARQL §18.5): a
-    solution is removed when a minus-group solution agrees with it on the
-    shared variables. A solution whose shared variables are all NULL
-    (unbound, e.g. from a UNION branch that never binds them) is KEPT —
-    Spark's non-null-safe anti-join equality reproduces the SPARQL
-    disjoint-domain rule exactly. A minus group sharing no variable at
-    all would be a universal no-op per §18.5, so it raises as a likely
-    query bug.
+    solution is removed when a minus-group solution agrees with it on
+    every shared variable the solution binds and it binds at least one.
+    An unbound (NULL, from OPTIONAL/UNION) shared variable matches any
+    value, so ``a=1, b=NULL`` is removed by a minus row ``a=1, b=2``; a
+    solution whose shared variables are all NULL is KEPT (its domain is
+    disjoint from the minus row's). With no nullable shared variable this
+    is the plain equi anti-join; otherwise the anti-join's condition
+    carries the NULL cases (a nested-loop anti-join against the distinct
+    minus keys when every shared variable is nullable). A minus group
+    sharing no variable at all would be a universal no-op per §18.5, so
+    it raises as a likely query bug.
     ``exists`` / ``not_exists`` are FILTER (NOT) EXISTS groups (SPARQL
     §8.1): a solution passes EXISTS when substituting its bindings into
     the group yields ≥1 match — a left-semi join on the shared variables
@@ -414,8 +419,8 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
     semantics on an UNBOUND shared variable (NULL from OPTIONAL/UNION)
     would need a null-matches-anything join, which is a non-equi nested
     loop at scale — such queries raise with guidance to restructure
-    (filter the nullable variable first, or use MINUS, whose NULL
-    semantics the anti-join gives for free).
+    (filter the nullable variable first, or use MINUS, whose anti-join
+    condition carries the NULL cases).
     ``values`` is the single-variable SPARQL ``VALUES`` form: per
     variable, an allow-list of constants inner-joined onto the solution
     (``VALUES ?v { ... }`` ≡ ``FILTER(?v IN (...))``). The list frame is
@@ -549,10 +554,20 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
                 f"match_bgp: MINUS group {group} shares no variable with "
                 "the solution — a universal no-op per SPARQL 1.1 §18.5, "
                 "almost certainly a query bug")
-        # non-null-safe anti-join: NULL shared vars never match, so
-        # disjoint-domain solutions survive — the §18.5 compatibility rule
-        acc = acc.join(sub.select(*shared).dropDuplicates(),
-                       on=shared, how="left_anti")
+        keys = sub.select(*shared).dropDuplicates()
+        if not nullable.intersection(shared):
+            acc = acc.join(keys, on=shared, how="left_anti")
+            continue
+        # §18.5 compatibility: an unbound (NULL) shared variable matches
+        # any value, but a solution binding none of the shared variables
+        # has a domain disjoint from the MINUS row's and survives
+        keys = keys.select(*(F.col(v).alias(f"minus${v}") for v in shared))
+        on, bound_any = F.lit(True), F.lit(False)
+        for v in shared:
+            eq = F.col(v) == F.col(f"minus${v}")
+            on = on & ((F.col(v).isNull() | eq) if v in nullable else eq)
+            bound_any = bound_any | F.col(v).isNotNull()
+        acc = acc.join(keys, on & bound_any, how="left_anti")
     for var, consts in (values or {}).items():
         if var not in bound:
             raise ValueError(f"match_bgp: VALUES variable {var!r} not "

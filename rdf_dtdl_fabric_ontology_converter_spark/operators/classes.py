@@ -29,8 +29,6 @@ from .. import (MAX_EXTENDS_DEPTH, OWL_CLASS, RDFS_CLASS, RDFS_SUBCLASS_OF,
 from ..functions.ids import fabric_id
 from ..functions.names import uri_to_name
 
-MAX_ROUNDS = 16  # path-doubling steps: 2^16 reachable depth
-
 
 def extract_classes(triples: DataFrame) -> DataFrame:
     """→ classes(class_uri, entity_id, name).
@@ -70,67 +68,57 @@ def subclass_edges(triples: DataFrame, classes: DataFrame) -> DataFrame:
 def transitive_closure(edges: DataFrame, key: Sequence[str] = (),
                        hops: bool = False) -> DataFrame:
     """edges(*key, child, parent) → (*key, src, dst[, hops]) reachability
-    closure via path-doubling joins — the engine's one closure loop.
+    closure — the engine's one closure, built lazily (no driver action).
 
-    Doubling gives 2^MAX_ROUNDS reachable depth in MAX_ROUNDS shuffles;
-    localCheckpoint each round truncates lineage (SURVEY §4 device 3).
-    Edge sets here are schema hierarchies (≤500 types by Fabric limit per
-    ontology), so every round is a small-table join.
+    Per key, one aggregation collects the distinct edges into one
+    adjacency map ``child → {parent: hops}``, closed by pointer doubling
+    inside one native higher-order expression: each round merges every
+    node's map with the maps of the nodes it reaches, so R rounds cover
+    walks of up to 2^R edges. R comes from the key's edge count (no
+    simple path is longer), plus MAX_EXTENDS_DEPTH with ``hops=True``, so
+    that walks around a cycle reach the cap.
 
-    ``key`` columns must also match across each joined pair, so one loop
-    closes every key's edge set at once (e.g. per predicate). With
-    ``hops=True`` each row carries the longest path length in edges,
-    capped at MAX_EXTENDS_DEPTH so cyclic inputs converge.
+    Bound: each key's edges and closure live in ONE row, so the edge sets
+    must be schema hierarchies (≤500 types by Fabric limit per ontology),
+    not instance graphs. ``key`` columns close each key's edge set apart
+    (e.g. per predicate). With ``hops=True`` each row carries the longest
+    path length in edges, capped at MAX_EXTENDS_DEPTH. Edges with a NULL
+    endpoint are dropped (a map key cannot be NULL).
     """
-    cols = [*key, F.col("child").alias("src"), F.col("parent").alias("dst")]
-    if hops:
-        cols.append(F.lit(1).alias("hops"))
-    closure = edges.select(*cols)
+    cap = F.lit(MAX_EXTENDS_DEPTH)
+    es = (edges.where(F.col("child").isNotNull() &
+                      F.col("parent").isNotNull())
+          .groupBy(*key).agg(F.collect_set(F.struct("child", "parent"))
+                             .alias("es")))
 
-    def state(c: DataFrame):
-        # one driver action per round: it materializes the lazy checkpoint
-        # AND is the convergence check (rows only grow and hops only rise,
-        # so an unchanged (count, sum of hops) means a fixpoint)
-        if not hops:
-            return (c.count(),)
-        return tuple(c.agg(F.count(F.lit(1)), F.sum("hops")).first())
+    def parents(c):
+        return F.map_from_entries(F.transform(
+            F.filter("es", lambda x: x["child"] == c),
+            lambda x: F.struct(x["parent"], F.lit(1))))
+    kids = F.array_distinct(F.transform("es", lambda x: x["child"]))
+    adj = F.map_from_arrays(kids, F.transform(kids, parents))
 
-    # (r6 note: seeding this first action with a double-double to save one
-    # round was tried and measured SLOWER — the seed joins run over the
-    # un-checkpointed edge lineage and cost more than the saved action.)
-    closure = closure.localCheckpoint(eager=False)
-    prev = state(closure)
-    if prev[0] == 0:
-        return closure
+    def double(acc, _):
+        # m ∪ the maps of every node m reaches, hops summed along the way;
+        # greatest keeps the longest (and skips map_zip_with's NULL for a
+        # node missing on one side)
+        return F.transform_values(acc, lambda _, m: F.aggregate(
+            F.filter(F.map_entries(m),
+                     lambda e: F.map_contains_key(acc, e.key)),
+            m,
+            lambda out, e: F.map_zip_with(
+                out,
+                F.transform_values(acc[e.key],
+                                   lambda _, h: F.least(e.value + h, cap)),
+                lambda _, a, b: F.greatest(a, b))))
 
-    def double(c: DataFrame) -> DataFrame:
-        on = F.col("a.dst") == F.col("b.src")
-        for k in key:
-            on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-        out = [*(F.col(f"a.{k}").alias(k) for k in key),
-               F.col("a.src").alias("src"), F.col("b.dst").alias("dst")]
-        if hops:
-            out.append(F.least(F.col("a.hops") + F.col("b.hops"),
-                               F.lit(MAX_EXTENDS_DEPTH)).alias("hops"))
-        grown = c.alias("a").join(c.alias("b"), on).select(*out)
-        both = c.unionByName(grown)
-        if not hops:
-            return both.dropDuplicates()
-        return both.groupBy(*key, "src", "dst") \
-            .agg(F.max("hops").alias("hops"))
-
-    # TWO doubling steps per driver round-trip (4x reachable depth per
-    # action). The intermediate closure stays lazy inside the same job;
-    # both sides of the second self-join share its identical subplan, so
-    # Spark's ReusedExchange computes the intermediate dedup shuffle once.
-    # A converged first step just makes the second a no-op in the same job.
-    for _ in range((MAX_ROUNDS + 1) // 2):
-        new_closure = double(double(closure)).localCheckpoint(eager=False)
-        n = state(new_closure)
-        if n == prev:
-            return new_closure
-        closure, prev = new_closure, n
-    return closure
+    walk = F.size("es") + (MAX_EXTENDS_DEPTH if hops else 0)
+    rounds = (F.floor(F.log2(walk)) + 1).cast("int")  # 2^rounds > walk
+    closed = (es.select(*key, F.explode(F.aggregate(
+                  F.sequence(F.lit(1), rounds), adj, double))
+                  .alias("src", "reach"))
+              .select(*key, "src", F.explode("reach").alias("dst", "hops")))
+    return closed if hops else closed.drop("hops")
 
 
 def choose_parents(edges: DataFrame, closure: DataFrame) -> DataFrame:

@@ -34,7 +34,8 @@ ontology size — thousands of rows against a trillion-row instance set —
 so each rule is instance.join(schema, on=pred/obj) where AQE broadcasts
 the schema side; no hint is forced (the round-4 rewrite_canonical
 lesson). Closures run on the schema edge sets only, via the shared
-path-doubling ``transitive_closure`` (O(log depth) small-table rounds).
+lazy ``transitive_closure`` (one adjacency-map row per key, no driver
+action).
 The instance side is touched by narrow filters + broadcast joins only —
 nothing shuffles on instance keys until the final dedup, which is the
 same salted-spread dedup every pipeline output already pays.
@@ -95,7 +96,7 @@ def rdfs_entailment(triples: DataFrame,
 
     # One pred-keyed closure (r6 fusion) covers whichever of the
     # subPropertyOf and subClassOf edge sets the enabled rules need: one
-    # path-doubling loop, not one per predicate.
+    # closure, not one per predicate.
     need_prop = bool({"rdfs5", "rdfs7"} & set(rules))
     need_cls = bool({"rdfs9", "rdfs11"} & set(rules))
     preds = [p for p, need in ((RDFS_SUBPROP, need_prop),

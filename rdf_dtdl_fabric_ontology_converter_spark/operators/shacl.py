@@ -79,7 +79,7 @@ Scale notes:
 - ``sh:class`` joins values against the typed-subjects frame on the
   value key — the one genuinely instance×instance join, same shape as
   the pipeline's resolver joins; the optional subClassOf closure is
-  schema-bounded (path-doubling, ``classes.transitive_closure``);
+  schema-bounded (the lazy ``classes.transitive_closure``);
 - the per-shape loop UNIONs plans, not data pulls: one action evaluates
   all shapes, and Spark shares the scan across branches.
 """

@@ -26,11 +26,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import (MAX_DEFINITION_BYTES, MAX_ENTITY_ID_PARTS, MAX_ENTITY_TYPES,
-                MAX_PROPERTIES_PER_ENTITY, MAX_RELATIONSHIP_TYPES,
+                MAX_INHERITANCE_DEPTH, MAX_PROPERTIES_PER_ENTITY,
+                MAX_RELATIONSHIP_TYPES,
                 OWL_DATATYPE_PROPERTY, OWL_NS, OWL_OBJECT_PROPERTY,
                 OWL_RESTRICTION, RDFS_DOMAIN, RDFS_RANGE, RDF_NS,
                 RDF_PROPERTY, RDF_TYPE, XSD_NS)
 from ..functions.names import local_name
+from .classes import transitive_closure
 
 SUPPORTED_XSD = [XSD_NS + t for t in (
     "string", "boolean", "dateTime", "date", "dateTimeStamp", "integer",
@@ -269,7 +271,8 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
     reserved namespaces, namespaceType/visibility enums, property
     valueType enum, per-entity property and id-part caps, path↔payload id
     agreement, endpoint shape, endpoint ids resolving to emitted entities,
-    the 500-per-kind type caps and the definition size cap.
+    the inheritance depth cap, the 500-per-kind type caps and the
+    definition size cap.
     """
     # try_to_binary → NULL on malformed base64 (unbase64 throws task errors)
     text = F.try_to_binary("payload", F.lit("base64")).cast("string")
@@ -297,6 +300,17 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
     empty_props = F.array().cast(_PROP_T)
     props = F.concat(F.coalesce(e["properties"], empty_props),
                      F.coalesce(e["timeseriesProperties"], empty_props))
+    # cross-row, read per part: every entity id that a part defines, and
+    # each entity's longest baseEntityTypeId chain from the hops closure
+    # (capped at MAX_EXTENDS_DEPTH, above MAX_INHERITANCE_DEPTH, so a
+    # cycle fires too)
+    known = decoded.agg(F.collect_set(e["id"]).alias("known"))
+    depth = (transitive_closure(decoded.select(e["id"].alias("child"),
+                                               base.alias("parent")),
+                                hops=True)
+             .groupBy("src").agg(F.max("hops").alias("depth")))
+    by_part = (decoded.crossJoin(F.broadcast(known))
+               .join(F.broadcast(depth), e["id"] == F.col("src"), "left"))
     per_part = [
         ("fabric:payload_type", "warning", ptype != "InlineBase64",
          F.concat(F.lit("Unexpected payloadType '"), ptype,
@@ -355,8 +369,12 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
          r.isNotNull() & (r["source"]["entityTypeId"].isNull() |
                           r["target"]["entityTypeId"].isNull()),
          "source/target missing entityTypeId", path),
+        ("fabric:inheritance_too_deep", "error",
+         F.col("depth") > MAX_INHERITANCE_DEPTH,
+         F.concat(F.lit("Inheritance depth "), F.col("depth"),
+                  F.lit(f" exceeds limit of {MAX_INHERITANCE_DEPTH}")), path),
     ]
-    per_property = [
+    per_element = [
         _each(F.filter(props, lambda p: p["id"].isNull() |
                        p["name"].isNull() | p["valueType"].isNull()),
               "fabric:property_missing_field", "error",
@@ -367,21 +385,14 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
               lambda p: F.concat(F.lit("Invalid valueType '"),
                                  p["valueType"], F.lit("' on property '"),
                                  p["name"], F.lit("'")), path),
+        _each(F.filter(F.array(r["source"]["entityTypeId"],
+                               r["target"]["entityTypeId"]),
+                       lambda x: ~F.array_contains(F.col("known"), x)),
+              "fabric:unknown_endpoint", "warning",
+              lambda x: F.concat(F.lit("Endpoint references unknown "
+                                       "entityTypeId '"), x, F.lit("'")),
+              path),
     ]
-
-    # cross-row: relationship endpoints that no entity part defines
-    eid = F.col("eid")
-    unknown_ends = (
-        decoded.where(r.isNotNull())
-        .select("path", F.explode(F.array(r["source"]["entityTypeId"],
-                                          r["target"]["entityTypeId"]))
-                .alias("eid"))
-        .join(decoded.where(e.isNotNull()).select(e["id"].alias("eid")),
-              "eid", "left_anti"))
-    per_unknown = [
-        ("fabric:unknown_endpoint", "warning", eid.isNotNull(),
-         F.concat(F.lit("Endpoint references unknown entityTypeId '"), eid,
-                  F.lit("'")), path)]
 
     # shared aggregate: the definition-wide caps
     n_ent, n_rel, n_bytes = F.col("n_ent"), F.col("n_rel"), F.col("bytes")
@@ -403,8 +414,7 @@ def definition_schema_issues(parts: DataFrame) -> DataFrame:
                   F.lit(f" bytes, exceeds limit of {MAX_DEFINITION_BYTES}")),
          None),
     ]
-    return (_evaluate(decoded, per_part, *per_property)
-            .unionByName(_evaluate(unknown_ends, per_unknown))
+    return (_evaluate(by_part, per_part, *per_element)
             .unionByName(_evaluate(totals, per_definition)))
 
 

@@ -93,12 +93,13 @@ def build_graph(spark: SparkSession, triples_prov: DataFrame,
     if want < cur:
         triples = triples.coalesce(want)
 
-    # The two iterative chains — subclass transitive closure and the fused
-    # class-expression resolution loop — are independent (both read only
-    # `triples`), and their cost is dominated by per-round driver actions,
-    # not data volume. Run them on concurrent driver threads (Spark's
-    # scheduler accepts jobs from multiple threads) so their round-trip
-    # latencies overlap instead of adding up.
+    # The two chains — classes with their first parents (whose lazy
+    # checkpoint runs its stage-jobs at call time) and the fused
+    # class-expression resolution loop (per-round driver actions) — are
+    # independent (both read only `triples`), and their cost is dominated
+    # by job latency, not data volume. Run them on concurrent driver
+    # threads (Spark's scheduler accepts jobs from multiple threads) so
+    # their latencies overlap instead of adding up.
     expr = expression_subgraph(triples)
 
     # Shared stage-B frames, checkpointed ONCE: first_ranges is consumed by

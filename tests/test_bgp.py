@@ -305,6 +305,23 @@ def test_minus_null_shared_var_is_kept(triples):
     assert rows == {(None, "ex:x"), (None, "ex:self")}
 
 
+def test_minus_null_among_several_shared_vars(spark):
+    # SPARQL §18.5: a=1, b=NULL is compatible with the MINUS row a=1, b=2
+    # and shares a with it, so it is removed; a solution with a and b
+    # both unbound shares no variable with any MINUS row and is kept
+    rows = [("ex:s1", "ex:a", "1"),
+            ("ex:s2", "ex:a", "1"), ("ex:s2", "ex:b", "2"),
+            ("ex:s3", "ex:a", "3"),
+            ("ex:s4", "ex:c", "x")]
+    t = spark.createDataFrame(rows, ["subj", "pred", "obj"])
+    out = match_bgp(t, [("?s", "ex:a", "?a")],
+                    optional=[[("?s", "ex:b", "?b")]],
+                    union=[[("?s", "ex:c", "?c")]],
+                    minus=[[("?m", "ex:a", "?a"), ("?m", "ex:b", "?b")]])
+    got = {(r.s, r.a, r.b, r.c) for r in out.collect()}
+    assert got == {("ex:s3", "3", None, None), ("ex:s4", None, None, "x")}
+
+
 def test_minus_requires_shared_variable(triples):
     with pytest.raises(ValueError, match="MINUS"):
         match_bgp(triples, [("?c", RDF_TYPE, CLS)],

@@ -658,6 +658,32 @@ def test_definition_caps(spark):
     assert [r for r in own.collect() if r["severity"] == "error"] == []
 
 
+def test_inheritance_depth_cap(spark):
+    """A part whose baseEntityTypeId chain is 11 deep exceeds
+    MAX_INHERITANCE_DEPTH (10); a 10-deep chain does not, and a cycle's
+    chain is unbounded (the closure's cap, 12)."""
+    from rdf_dtdl_fabric_ontology_converter_spark.operators.validate import (
+        definition_schema_issues)
+
+    def chain(start, depth):
+        return [_part(_ent(start + i, **({"baseEntityTypeId":
+                                          str(start + i + 1)}
+                                         if i < depth else {})),
+                      f"EntityTypes/{start + i}/definition.json")
+                for i in range(depth + 1)]
+
+    cycle = [_part(_ent(300 + i, baseEntityTypeId=str(301 - i)),
+                   f"EntityTypes/{300 + i}/definition.json")
+             for i in range(2)]
+    parts = spark.createDataFrame(chain(100, 11) + chain(200, 10) + cycle,
+                                  PART_SCHEMA)
+    assert _rows(definition_schema_issues(parts)) == [
+        ("fabric:inheritance_too_deep", "error",
+         f"Inheritance depth {d} exceeds limit of 10",
+         f"EntityTypes/{i}/definition.json")
+        for d, i in ((11, 100), (12, 300), (12, 301))]
+
+
 def test_kg_job_writes_dtdl_and_cdm_issues(spark, tmp_path):
     """The kg job's issues/ holds the DTDL and CDM validators' rows next to
     the RDF preflight rows, with and without --checkpoint-root."""
