@@ -32,7 +32,8 @@ Semantics (SPARQL 1.1 §18.3, BGP evaluation):
   edge sets; each branch may carry its own ``^``), and a trailing ``+``
   (OneOrMorePath — the TRANSITIVE closure, computed lazily by the shared
   ``classes.transitive_closure``, whose edges and closure live in one
-  row, so the closed edge set must be schema-sized, e.g. subClassOf).
+  row, so the closed edge set must be schema-sized, e.g. subClassOf; past
+  ``classes.MAX_CLOSURE_EDGES`` distinct edges the query fails).
   The grammar is unambiguous on raw IRIs: ``|`` is not a legal IRI
   character (RFC 3987) and an IRI never starts with ``^``. One
   documented divergence from SPARQL precedence: a trailing ``+`` closes
@@ -77,6 +78,9 @@ Scale notes (the part the reference never had to think about):
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from itertools import product
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -158,7 +162,10 @@ def _path_edges(triples: DataFrame,
     the active graph's terms). Each branch is a pushed-down predicate
     filter; inverse branches swap the endpoint columns; alternation
     unions the branch edge sets; ``+``/``*`` close the union
-    transitively (``classes.transitive_closure``, no driver action).
+    transitively (``classes.transitive_closure``, no driver action, one
+    row for the whole edge set: a ``+``/``*`` path, and a negated set's
+    complement above all, must be schema-sized — past
+    ``classes.MAX_CLOSURE_EDGES`` distinct edges the query fails).
     ``+``/``*``/``?`` results are distinct (ALP yields sets); plain
     alternation keeps multiset semantics. A raw IRI legitimately ENDING
     in ``+``/``*``/``?`` would be misread as a path — the same documented
@@ -404,9 +411,11 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
     value, so ``a=1, b=NULL`` is removed by a minus row ``a=1, b=2``; a
     solution whose shared variables are all NULL is KEPT (its domain is
     disjoint from the minus row's). With no nullable shared variable this
-    is the plain equi anti-join; otherwise the anti-join's condition
-    carries the NULL cases (a nested-loop anti-join against the distinct
-    minus keys when every shared variable is nullable). A minus group
+    is the plain equi anti-join; otherwise the minus keys are expanded
+    to one row per subset of the nullable shared variables (the unbound
+    ones NULL) and matched null-safely, so the anti-join keeps equi keys
+    (2^k key variants for k nullable shared variables; all-unbound
+    solutions bypass the join). A minus group
     sharing no variable at all would be a universal no-op per §18.5, so
     it raises as a likely query bug.
     ``exists`` / ``not_exists`` are FILTER (NOT) EXISTS groups (SPARQL
@@ -420,7 +429,7 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
     would need a null-matches-anything join, which is a non-equi nested
     loop at scale — such queries raise with guidance to restructure
     (filter the nullable variable first, or use MINUS, whose anti-join
-    condition carries the NULL cases).
+    handles the NULL cases).
     ``values`` is the single-variable SPARQL ``VALUES`` form: per
     variable, an allow-list of constants inner-joined onto the solution
     (``VALUES ?v { ... }`` ≡ ``FILTER(?v IN (...))``). The list frame is
@@ -555,19 +564,36 @@ def match_bgp(triples: DataFrame, patterns: list[Pattern], *,
                 "the solution — a universal no-op per SPARQL 1.1 §18.5, "
                 "almost certainly a query bug")
         keys = sub.select(*shared).dropDuplicates()
-        if not nullable.intersection(shared):
+        nul = [v for v in shared if v in nullable]
+        if not nul:
             acc = acc.join(keys, on=shared, how="left_anti")
             continue
         # §18.5 compatibility: an unbound (NULL) shared variable matches
-        # any value, but a solution binding none of the shared variables
-        # has a domain disjoint from the MINUS row's and survives
-        keys = keys.select(*(F.col(v).alias(f"minus${v}") for v in shared))
-        on, bound_any = F.lit(True), F.lit(False)
-        for v in shared:
-            eq = F.col(v) == F.col(f"minus${v}")
-            on = on & ((F.col(v).isNull() | eq) if v in nullable else eq)
-            bound_any = bound_any | F.col(v).isNotNull()
-        acc = acc.join(keys, on & bound_any, how="left_anti")
+        # any value. One key row per subset of the nullable variables a
+        # solution may bind (the others NULL), matched null-safely, keeps
+        # the anti-join on equi keys
+        variants = []
+        for mask in product((True, False), repeat=len(nul)):
+            unbound = {v for v, b in zip(nul, mask) if not b}
+            if len(unbound) < len(shared):
+                variants.append(keys.select(*(
+                    (F.lit(None).cast(keys.schema[v].dataType)
+                     if v in unbound else F.col(v)).alias(f"minus${v}")
+                    for v in shared)))
+        on = reduce(lambda a, b: a & b, (
+            F.col(v).eqNullSafe(F.col(f"minus${v}")) for v in shared))
+        free = None
+        if len(nul) == len(shared):
+            # a solution binding none of the shared variables has a domain
+            # disjoint from every MINUS row's and survives; set apart, so
+            # a UNION branch with all of them missing has no key-less join
+            any_bound = reduce(lambda a, b: a | b,
+                               (F.col(v).isNotNull() for v in shared))
+            free, acc = acc.where(~any_bound), acc.where(any_bound)
+        acc = acc.join(reduce(lambda a, b: a.unionByName(b), variants),
+                       on, "left_anti")
+        if free is not None:
+            acc = acc.unionByName(free)
     for var, consts in (values or {}).items():
         if var not in bound:
             raise ValueError(f"match_bgp: VALUES variable {var!r} not "

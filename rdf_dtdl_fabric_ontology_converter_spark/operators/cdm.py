@@ -205,7 +205,12 @@ def convert_cdm(cdm_entities: DataFrame, cdm_rels: DataFrame,
                 flatten_inheritance: bool = True
                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """→ (entity_types, relationship_types, skipped) in the shared schema."""
-    ents = _dedup_entities(cdm_entities).localCheckpoint(eager=False)
+    # eager: a lazy checkpoint here is first computed inside the
+    # caller's final query, where stages running at once each read
+    # it; once the first one finishes it drops the lineage whose SQL
+    # metrics the others still report (driver: 'non-existent
+    # accumulator' errors)
+    ents = _dedup_entities(cdm_entities).localCheckpoint()
     ents = ents.withColumn(
         "fabric_id", fabric_id(F.concat(F.lit("cdm:"), "entity_name")))
 

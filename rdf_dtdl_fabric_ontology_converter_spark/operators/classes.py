@@ -24,10 +24,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .. import (MAX_EXTENDS_DEPTH, OWL_CLASS, RDFS_CLASS, RDFS_SUBCLASS_OF,
-                RDF_TYPE)
+from .. import (MAX_ENTITY_TYPES, MAX_EXTENDS_DEPTH, OWL_CLASS, RDFS_CLASS,
+                RDFS_SUBCLASS_OF, RDF_TYPE)
 from ..functions.ids import fabric_id
 from ..functions.names import uri_to_name
+
+# Most distinct edges one closure key may hold: a schema hierarchy of up to
+# MAX_ENTITY_TYPES types with a few parents each. At this size a key's
+# closure takes seconds on one core; an instance graph must not get here.
+MAX_CLOSURE_EDGES = 4 * MAX_ENTITY_TYPES
 
 
 def extract_classes(triples: DataFrame) -> DataFrame:
@@ -78,12 +83,15 @@ def transitive_closure(edges: DataFrame, key: Sequence[str] = (),
     simple path is longer), plus MAX_EXTENDS_DEPTH with ``hops=True``, so
     that walks around a cycle reach the cap.
 
-    Bound: each key's edges and closure live in ONE row, so the edge sets
-    must be schema hierarchies (≤500 types by Fabric limit per ontology),
-    not instance graphs. ``key`` columns close each key's edge set apart
-    (e.g. per predicate). With ``hops=True`` each row carries the longest
-    path length in edges, capped at MAX_EXTENDS_DEPTH. Edges with a NULL
-    endpoint are dropped (a map key cannot be NULL).
+    Bound: each key's edges and closure live in ONE row, closed in one
+    task (the adjacency build alone is quadratic in the key's edges), so
+    the edge sets must be schema hierarchies (≤500 types by Fabric limit
+    per ontology), not instance graphs. A key with more than
+    MAX_CLOSURE_EDGES distinct edges fails the query (``raise_error``)
+    instead of running for hours. ``key`` columns close each key's edge
+    set apart (e.g. per predicate). With ``hops=True`` each row carries
+    the longest path length in edges, capped at MAX_EXTENDS_DEPTH. Edges
+    with a NULL endpoint are dropped (a map key cannot be NULL).
     """
     cap = F.lit(MAX_EXTENDS_DEPTH)
     es = (edges.where(F.col("child").isNotNull() &
@@ -113,7 +121,12 @@ def transitive_closure(edges: DataFrame, key: Sequence[str] = (),
                 lambda _, a, b: F.greatest(a, b))))
 
     walk = F.size("es") + (MAX_EXTENDS_DEPTH if hops else 0)
-    rounds = (F.floor(F.log2(walk)) + 1).cast("int")  # 2^rounds > walk
+    rounds = F.when(F.size("es") > MAX_CLOSURE_EDGES, F.raise_error(
+        F.format_string("transitive_closure: %d edges in one key exceed "
+                        "MAX_CLOSURE_EDGES (%d); closures serve schema "
+                        "hierarchies, not instance graphs",
+                        F.size("es"), F.lit(MAX_CLOSURE_EDGES)))
+    ).otherwise((F.floor(F.log2(walk)) + 1).cast("int"))  # 2^rounds > walk
     closed = (es.select(*key, F.explode(F.aggregate(
                   F.sequence(F.lit(1), rounds), adj, double))
                   .alias("src", "reach"))

@@ -183,7 +183,12 @@ def convert_interfaces(interfaces: DataFrame, modes: DtdlModes | None = None
                        ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """→ (entity_types, relationship_types, skipped) in the shared schema."""
     modes = modes or DtdlModes()
-    ifaces = _dedup_interfaces(interfaces).localCheckpoint(eager=False)
+    # eager: a lazy checkpoint here is first computed inside the
+    # caller's final query, where stages running at once each read
+    # it; once the first one finishes it drops the lineage whose SQL
+    # metrics the others still report (driver: 'non-existent
+    # accumulator' errors)
+    ifaces = _dedup_interfaces(interfaces).localCheckpoint()
     ifaces = ifaces.withColumn("fabric_id", dtmi_fabric_id(F.col("dtmi")))
 
     skipped = (interfaces.where(F.col("parse_error").isNotNull())

@@ -33,9 +33,12 @@ Scale shape (the part that matters at 10^12 docs): every SCHEMA frame
 ontology size — thousands of rows against a trillion-row instance set —
 so each rule is instance.join(schema, on=pred/obj) where AQE broadcasts
 the schema side; no hint is forced (the round-4 rewrite_canonical
-lesson). Closures run on the schema edge sets only, via the shared
-lazy ``transitive_closure`` (one adjacency-map row per key, no driver
-action).
+lesson). The RDFS closures run on the schema edge sets only, via the
+shared lazy ``transitive_closure`` (one adjacency-map row per key, no
+driver action). The OWL transitive rule is the exception: it closes a
+declared-transitive predicate's INSTANCE statements, so each such
+predicate must stay schema-sized (≤ MAX_CLOSURE_EDGES distinct edges, or
+the query fails).
 The instance side is touched by narrow filters + broadcast joins only —
 nothing shuffles on instance keys until the final dedup, which is the
 same salted-spread dedup every pipeline output already pays.
@@ -198,7 +201,10 @@ def owl_entailment(triples: DataFrame,
       transitive closure of p's statement set, computed AFTER
       inverse/symmetric augmentation (so a symmetric transitive
       predicate closes over the symmetrized edges — undirected
-      reachability, which IS that combination's fixpoint);
+      reachability, which IS that combination's fixpoint). The closure
+      holds each predicate's statements in one row, so a transitive
+      predicate must be schema-sized: more than
+      ``classes.MAX_CLOSURE_EDGES`` distinct statements fail the query;
     - **functional_sameas**: (p a owl:FunctionalProperty) ∧ (s p o1) ∧
       (s p o2), o1 ≠ o2, both IRIs → (o1 owl:sameAs o2) in both orders.
       Literal-valued functional conflicts entail literal equality, not

@@ -14,7 +14,6 @@ exact resume with per-partition lineage (north rule).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,9 +74,8 @@ def build_graph(spark: SparkSession, triples_prov: DataFrame,
     triples = dedup_triples(triples_prov,
                             spread_hot_subjects=True).localCheckpoint(eager=False)
 
-    # Materialize the deduped graph once, up front, so both iterative
-    # chains below start from the cached checkpoint instead of racing to
-    # materialize it.
+    # Materialize the deduped graph once, up front, so every stage-B
+    # frame below starts from the cached checkpoint.
     n_triples = triples.count()
 
     # Right-size downstream scan parallelism from the MEASURED graph size:
@@ -93,13 +91,6 @@ def build_graph(spark: SparkSession, triples_prov: DataFrame,
     if want < cur:
         triples = triples.coalesce(want)
 
-    # The two chains — classes with their first parents (whose lazy
-    # checkpoint runs its stage-jobs at call time) and the fused
-    # class-expression resolution loop (per-round driver actions) — are
-    # independent (both read only `triples`), and their cost is dominated
-    # by job latency, not data volume. Run them on concurrent driver
-    # threads (Spark's scheduler accepts jobs from multiple threads) so
-    # their latencies overlap instead of adding up.
     expr = expression_subgraph(triples)
 
     # Shared stage-B frames, checkpointed ONCE: first_ranges is consumed by
@@ -113,25 +104,16 @@ def build_graph(spark: SparkSession, triples_prov: DataFrame,
     props_dp = data_property_set(triples, xsd_map, franges=franges) \
         .localCheckpoint(eager=False)
 
-    def _classes_chain() -> DataFrame:
-        c = classes_with_parents(triples, extract_classes(triples))
-        return c.localCheckpoint(eager=False)
-
-    def _resolve_chain() -> DataFrame:
-        # ONE fused loop for all of Stage B (data-property domains +
-        # datatype unions + object-property domains/ranges): one
-        # frontier-count action per round instead of four private loops;
-        # consumers read the single lazily-checkpointed result.
-        return resolve_graph_roots(
-            triples, expr,
-            dp_bnode_ranges=dp_bnode_ranges(triples, xsd_map,
-                                            props=props_dp, franges=franges))
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        classes_f = pool.submit(_classes_chain)
-        resolved_f = pool.submit(_resolve_chain)
-        classes = classes_f.result()
-        resolved = resolved_f.result()
+    classes = classes_with_parents(
+        triples, extract_classes(triples)).localCheckpoint(eager=False)
+    # ONE fused loop for all of Stage B (data-property domains + datatype
+    # unions + object-property domains/ranges): one frontier-count action
+    # per round instead of four private loops; consumers read the single
+    # lazily-checkpointed result.
+    resolved = resolve_graph_roots(
+        triples, expr,
+        dp_bnode_ranges=dp_bnode_ranges(triples, xsd_map, props=props_dp,
+                                        franges=franges))
     data_props, prop_domains = extract_data_properties(
         triples, classes, expr, xsd_map, resolved=resolved,
         props=props_dp, franges=franges)

@@ -320,6 +320,25 @@ def test_minus_null_among_several_shared_vars(spark):
                     minus=[[("?m", "ex:a", "?a"), ("?m", "ex:b", "?b")]])
     got = {(r.s, r.a, r.b, r.c) for r in out.collect()}
     assert got == {("ex:s3", "3", None, None), ("ex:s4", None, None, "x")}
+    # every shared variable is nullable here, yet the anti-join keeps
+    # equi keys (null-safe) instead of a nested loop over the minus keys
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan and "NestedLoop" not in plan
+
+
+def test_minus_null_with_a_bound_shared_var(spark):
+    # s is always bound, b is OPTIONAL: s1 (b unbound) matches the MINUS
+    # row on s alone; s2 binds b=3 and disagrees with the row's b=2
+    rows = [("ex:s1", "ex:a", "1"), ("ex:s1", "ex:d", "2"),
+            ("ex:s2", "ex:a", "1"), ("ex:s2", "ex:b", "3"),
+            ("ex:s2", "ex:d", "2"),
+            ("ex:s3", "ex:a", "1")]
+    t = spark.createDataFrame(rows, ["subj", "pred", "obj"])
+    out = match_bgp(t, [("?s", "ex:a", "?a")],
+                    optional=[[("?s", "ex:b", "?b")]],
+                    minus=[[("?s", "ex:d", "?b")]])
+    assert {(r.s, r.b) for r in out.collect()} == {("ex:s2", "3"),
+                                                    ("ex:s3", None)}
 
 
 def test_minus_requires_shared_variable(triples):

@@ -1,14 +1,17 @@
-"""Job budgets for the closure and its callers.
+"""Job budgets and the size bound for the closure and its callers.
 
-Each check runs under a job group of its own and counts the Spark jobs
-that group submitted, from the status tracker: building a plan that holds
-a closure submits none, and a property-path query stays a few jobs.
+Each budget check runs under a job group of its own and counts the Spark
+jobs that group submitted, from the status tracker: building a plan that
+holds a closure submits none, and a property-path query stays a few jobs.
+A closure key past MAX_CLOSURE_EDGES fails instead of running on.
 """
 
 import itertools
 
+import pytest
+
 from rdf_dtdl_fabric_ontology_converter_spark.operators.classes import (
-    transitive_closure)
+    MAX_CLOSURE_EDGES, transitive_closure)
 from rdf_dtdl_fabric_ontology_converter_spark.operators.dtdl import (
     INTERFACES_SCHEMA)
 from rdf_dtdl_fabric_ontology_converter_spark.operators.sparql import (
@@ -68,3 +71,13 @@ def test_dtdl_issues_is_lazy(spark):
     issues, jobs = _jobs(spark, lambda: dtdl_issues(ifaces))
     assert jobs == 0
     assert issues.collect() == []
+
+
+def test_closure_rejects_an_oversized_key(spark):
+    # a star of MAX_CLOSURE_EDGES + 1 edges in one key fails the query;
+    # the same edges split over two keys close normally
+    rows = [(i % 2, f"n{i}", "root") for i in range(MAX_CLOSURE_EDGES + 1)]
+    edges = spark.createDataFrame(rows, "k int, child string, parent string")
+    with pytest.raises(Exception, match="MAX_CLOSURE_EDGES"):
+        transitive_closure(edges.drop("k")).collect()
+    assert transitive_closure(edges, key=["k"]).count() == len(rows)
